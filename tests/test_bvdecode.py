@@ -8,6 +8,8 @@ test_bvgraph_golden.py mirror ``sequential.rs:300-385`` /
 vector path to the reference too.
 """
 
+import os
+
 import numpy as np
 import pytest
 
@@ -187,6 +189,10 @@ def test_property_random_graphs_all_codes():
     check()
 
 
+@pytest.mark.skipif(
+    not os.path.exists(DATA + ".graph"),
+    reason="reference cnr-2000 data not present",
+)
 def test_cnr2000_prefix_and_midrange_parity():
     """Real-crawl structure (the shipped Java bitstream): vector decode
     equals scalar decode on a 60k-node prefix and on a mid-stream range

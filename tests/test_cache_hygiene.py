@@ -15,6 +15,7 @@ from webgraph_rs_spark.algorithms import (
     label_propagation,
     llp,
     strongly_connected_components,
+    triangle_count,
     triangles_per_vertex,
 )
 from webgraph_rs_spark.textops import ngram_jaccard_pairs
@@ -42,6 +43,28 @@ def test_no_storage_growth_across_graph_ops(spark):
         counts.append(_n_persist(spark))
     assert counts[1] <= counts[0], counts
     g.unpersist()
+
+
+def test_graph_owns_one_symmetrized_view(spark):
+    """CC, LP and triangles share the graph's one symmetrized view: it is
+    the only table cached above the graph's own, and ``g.unpersist()``
+    frees it with them."""
+    spark.sparkContext._jvm.System.gc()  # drop earlier tests' dead RDDs
+    before = _n_persist(spark)
+    g = pref_attach_like(spark, 400, out_deg=4, seed=11).persist()
+    g.edges.count()
+    g.vertices.count()
+    own = _n_persist(spark)
+    cc = connected_components(g)
+    release_state(cc.labels)
+    assert _n_persist(spark) == own + 1
+    lp = label_propagation(g, max_iter=3)
+    release_state(lp.labels)
+    assert _n_persist(spark) == own + 1
+    triangle_count(g)
+    assert _n_persist(spark) == own + 1
+    g.unpersist()
+    assert _n_persist(spark) == before
 
 
 def test_llp_releases_losing_labelings(spark):

@@ -5,6 +5,9 @@ checkpoint => byte-identical final state vs an uninterrupted run."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import numpy as np
 import pytest
 
@@ -148,6 +151,37 @@ def test_resume_identical_to_uninterrupted(spark, tmp_ckpt):
     assert resumed.iterations == full.iterations
 
 
+def test_commit_without_manifest_line_resumes_from_previous(spark, tmp_ckpt):
+    """A kill between iteration k+1's parquet commit and its manifest line
+    resumes from k to the uninterrupted ranks; each committed iteration has
+    exactly one manifest line, written with its metrics."""
+    n, edges = erdos_renyi(50, 0.1, seed=7)
+    g = graph_from_pandas(spark, edges, n)
+
+    full = pagerank(g, threshold=1e-9, checkpoint_dir=tmp_ckpt + "/full", job="pr")
+    pagerank(g, threshold=1e-9, max_iter=4, checkpoint_dir=tmp_ckpt + "/res", job="pr")
+    store = CheckpointStore(tmp_ckpt + "/res", "pr")
+    lines = store.manifest()
+    assert [m["iteration"] for m in lines] == [1, 2, 3, 4]
+    assert all("err" in m["metrics"] for m in lines)
+    with open(store.manifest_path, "w", encoding="utf-8") as f:
+        f.writelines(json.dumps(m) + "\n" for m in lines[:-1])
+    assert os.path.exists(store.state_path(4))
+
+    resumed = pagerank(
+        g, threshold=1e-9, checkpoint_dir=tmp_ckpt + "/res", job="pr", resume=True
+    )
+    assert resumed.resumed_from == 3
+    a = np.zeros(n)
+    b = np.zeros(n)
+    for r in full.ranks.collect():
+        a[r["id"]] = r["rank"]
+    for r in resumed.ranks.collect():
+        b[r["id"]] = r["rank"]
+    assert np.allclose(a, b, atol=1e-12)
+    assert resumed.iterations == full.iterations
+
+
 def test_torn_manifest_line_ignored(spark, tmp_ckpt):
     store = CheckpointStore(tmp_ckpt, "torn")
     df = spark.range(10).selectExpr("id", "cast(id as double) as rank")
@@ -171,6 +205,22 @@ def test_iterate_generic_counter(spark, tmp_ckpt):
         checkpoint_dir=tmp_ckpt, job="ctr",
     )
     assert res.iterations == 5
+    assert {r["v"] for r in res.state.collect()} == {5}
+
+
+def test_safety_valve_exit_truncates_final_state(spark):
+    """The max_safety_iter exit truncates the final state like every stop
+    path, so the returned state stays readable without its cache."""
+    from pyspark.sql import functions as F
+
+    state0 = spark.range(4).selectExpr("id", "cast(0 as long) as v")
+
+    def step(state, it):
+        return state.withColumn("v", F.col("v") + 1), {"modified": 1}
+
+    res = iterate(spark, state0, step, MaxIter(100), max_safety_iter=5)
+    assert res.iterations == 5
+    res.state.unpersist()
     assert {r["v"] for r in res.state.collect()} == {5}
 
 

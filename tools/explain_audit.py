@@ -89,7 +89,7 @@ def main() -> int:
         .select(F.col("id").alias("src"), (F.col("rank") / F.col("out_deg")).alias("c"))
     )
     contribs = (
-        g.edges.join(scaled.hint("shuffle_hash"), "src")
+        g.src_edges().join(scaled.hint("shuffle_hash"), "src")
         .groupBy("dst")
         .agg(F.sum("c").alias("contrib"))
     )
@@ -122,10 +122,7 @@ def main() -> int:
     )
 
     # 4. CC round
-    from webgraph_rs_spark.algorithms.components import _sym_edges
-
-    sym = _sym_edges(g).repartition("src").persist()
-    sym.count()
+    sym = g.sym_edges()
     st = g.vertices.select("id", F.col("id").alias("label")).localCheckpoint()
     nbr = (
         sym.join(st.withColumnRenamed("id", "src").hint("shuffle_hash"), "src")

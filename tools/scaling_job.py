@@ -85,10 +85,6 @@ def main() -> int:
     e = canonical_edge_layout(edges, num_partitions=PARTITIONS).persist()
     m = e.count()
     build_sec = time.monotonic() - t0
-    # src_layout=True: the table IS the canonical hash(src) layout and is
-    # persisted here — pagerank's edges_by_src reuses it instead of
-    # re-shuffling + double-caching 134M arcs (the same flag from_edges
-    # sets; the old call left it unset and paid both at setup)
     g = LinkGraph(
         e, spark.range(N_NODES).select("id"), _num_nodes=N_NODES,
         src_layout=True,

@@ -75,9 +75,7 @@ def bfs_distances(
         frontier = spark.createDataFrame([(int(r),) for r in roots], "id long")
     if node_filter is not None:
         frontier = frontier.filter(node_filter)
-    from webgraph_rs_spark.graph import edges_by_src
-
-    edges, own_edges = edges_by_src(g)
+    edges = g.src_edges()
 
     # localCheckpoint (not persist) per level: the frontier recursion
     # otherwise re-expands the whole logical-plan tree every level —
@@ -142,8 +140,6 @@ def bfs_distances(
         release_state(frontier)  # the final empty frontier checkpoint
     for h in hold:
         release_state(h)
-    if own_edges:
-        edges.unpersist()
     ev_df = None
     if events:
         ev_df = spark.createDataFrame(

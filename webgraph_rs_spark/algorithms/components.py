@@ -37,21 +37,6 @@ class CCResult:
     resumed_from: int | None = None
 
 
-def _sym_edges(g: LinkGraph, partition_by: str | None = None) -> DataFrame:
-    """Both directions, no self-loops, deduped.
-
-    ``partition_by``: hash-partition by that column BEFORE the dedup — the
-    hash(key) distribution already satisfies the (src, dst) clustering the
-    dedup aggregate needs, so the whole symmetrize lands in ONE exchange and
-    comes out in the layout the caller wants, instead of the old
-    dedup-then-repartition double shuffle (guide §2.4)."""
-    t = g.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    e = g.edges.unionByName(t).filter(F.col("src") != F.col("dst"))
-    if partition_by:
-        e = e.repartition(partition_by)
-    return e.dropDuplicates(["src", "dst"])
-
-
 def connected_components(
     g: LinkGraph,
     max_iter: int = 200,
@@ -84,8 +69,7 @@ def connected_components(
     from pyspark.sql import Observation
 
     spark = g.edges.sparkSession
-    sym = _sym_edges(g, partition_by="src").persist()
-    sym.count()
+    sym = g.sym_edges()
     state0 = g.vertices.select(
         "id", F.col("id").alias("label"), F.lit(True).alias("_chg")
     )
@@ -140,7 +124,6 @@ def connected_components(
         # adopt join) — plans grow ~2^K between truncations (driver.py)
         truncate_every=3,
     )
-    sym.unpersist()
     # drop the internal _chg column and hand back a self-contained frame:
     # a bare projection could not release the state's cache/checkpoint
     # blocks (guide §5 unpersist hygiene), so materialize then release
@@ -171,11 +154,7 @@ def cc_star(
     """
     spark = g.edges.sparkSession
     # state = current edge set, canonical direction high -> low
-    state0 = (
-        _sym_edges(g)
-        .filter(F.col("src") > F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
+    state0 = g.sym_edges().filter(F.col("src") > F.col("dst"))
 
     def _large_star(edges: DataFrame) -> DataFrame:
         # neighborhoods over BOTH directions; attach strictly-larger

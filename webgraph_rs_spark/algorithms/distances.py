@@ -56,8 +56,7 @@ def all_pairs_distances(
     roots = (sources if sources is not None else g.vertices).select(
         F.col("id").alias("root")
     )
-    edges = g.edges.repartition("src").persist()
-    edges.count()
+    edges = g.src_edges()
     frontier = roots.select("root", F.col("root").alias("id")).localCheckpoint()
     visited = frontier.withColumn("distance", F.lit(0).cast("long")).localCheckpoint()
     depth = 0
@@ -81,7 +80,6 @@ def all_pairs_distances(
             release_state(old_visited)
         release_state(frontier)
         frontier = nxt
-    edges.unpersist()
     return APSPResult(visited, depth)
 
 
@@ -953,8 +951,8 @@ def exact_sum_sweep(
     )
     fwd.count()
     bwd.count()
-    g_fwd = LinkGraph(fwd, g.vertices)
-    g_bwd = LinkGraph(bwd, g.vertices)
+    g_fwd = LinkGraph(fwd, g.vertices, src_layout=True)
+    g_bwd = LinkGraph(bwd, g.vertices, src_layout=True)
 
     want_back = mode == "all"
     want_all = mode in ("all", "all_forward")

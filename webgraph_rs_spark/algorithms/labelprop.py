@@ -44,7 +44,6 @@ from webgraph_rs_spark.driver import (
     release_state,
 )
 from webgraph_rs_spark.graph import LinkGraph
-from webgraph_rs_spark.algorithms.components import _sym_edges
 
 
 @dataclass
@@ -98,14 +97,7 @@ def label_propagation(
     from pyspark.sql import Observation
 
     spark = g.edges.sparkSession
-    own_edges = True
-    if symmetrize:
-        edges = _sym_edges(g, partition_by="src").persist()
-    else:
-        from webgraph_rs_spark.graph import edges_by_src
-
-        edges, own_edges = edges_by_src(g)
-    edges.count()
+    edges = g.sym_edges() if symmetrize else g.src_edges()
     n_vertices = g.num_nodes
     state0 = g.vertices.select(
         "id",
@@ -293,8 +285,6 @@ def label_propagation(
         # plus the volume/gain joins when enabled — keep ~2^K small
         truncate_every=3 if (gamma == 0.0 and min_gain is None) else 2,
     )
-    if own_edges:
-        edges.unpersist()
     # materialize the (id, label) projection and release the internal
     # state — a bare projection could not release its parent's blocks
     labels = res.state.select("id", "label").localCheckpoint()

@@ -90,17 +90,12 @@ def pagerank(
     # The edge table stays bare (src, dst) — at web scale it dominates all
     # storage and shuffle, so the 1/outdeg weight is NOT materialized per
     # edge; instead the (vertex-sized) state is scaled by 1/outdeg once per
-    # iteration. Hash-partitioned by src (reusing the caller's persisted
-    # canonical layout when available — guide §2.4): the per-iteration
+    # iteration. The graph's hash(src) view (guide §2.4): the per-iteration
     # gather join never re-shuffles the edges side.
-    from webgraph_rs_spark.graph import edges_by_src
-
-    edges, own_edges = edges_by_src(g)
-    if g._num_arcs is not None:
-        m = g._num_arcs
-    else:
-        m = edges.count()  # one action: arc count + cache materialization
-        g._num_arcs = m
+    edges = g.src_edges()
+    if g._num_arcs is None:
+        g._num_arcs = edges.count()  # one action: arc count + cache materialization
+    m = g._num_arcs
 
     # vertex_meta: id, pref, u (dangling redistribution weight), is_dangling
     out_deg = g.out_degrees()
@@ -277,8 +272,6 @@ def pagerank(
     )
     err = res.metrics_history[-1].get("err", float("nan")) if res.metrics_history else 0.0
     meta.unpersist()
-    if own_edges:
-        edges.unpersist()
     return PageRankResult(
         ranks=res.state,
         iterations=res.iterations,

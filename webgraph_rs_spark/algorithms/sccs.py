@@ -136,18 +136,16 @@ def strongly_connected_components(
     import time as _time
     alive = g.vertices.select("id").localCheckpoint()
     n_alive = alive.count()
-    base = g.edges.filter(F.col("src") != F.col("dst")).select("src", "dst")
-    # the two base layouts persist for the whole run; every per-round
+    loopless = F.col("src") != F.col("dst")
+    # the two base layouts last for the whole run; every per-round
     # restriction derives from them + the CURRENT alive checkpoint only
     # (constant-depth lineage — chaining restrict-over-restrict would make
     # an evicted partition's recompute walk released checkpoints).
-    # When the graph is already canonical (hash(src)) and caller-persisted,
-    # the src layout is the filter itself — filter/project preserve the
-    # partitioning and read through the existing cache, so only the dst
-    # layout costs a shuffle + cache (guide §2.4).
-    own_base_src = not (g.src_layout and g.edges.is_cached)
-    base_src = base.repartition("src").persist() if own_base_src else base
-    base_dst = base.repartition("dst").persist()
+    # The src layout is the graph's hash(src) view filtered — filter/project
+    # preserve the partitioning and read through the view's cache, so only
+    # the dst layout costs a shuffle + cache (guide §2.4).
+    base_src = g.src_edges().filter(loopless).select("src", "dst")
+    base_dst = g.edges.filter(loopless).select("src", "dst").repartition("dst").persist()
     by_src, by_dst = base_src, base_dst
     metrics: list[dict] = []
     rounds = 0
@@ -533,8 +531,6 @@ def strongly_connected_components(
     if by_src is not base_src:
         by_src.unpersist()
         by_dst.unpersist()
-    if own_base_src:
-        base_src.unpersist()
     base_dst.unpersist()
     spark = g.edges.sparkSession
     if parts:

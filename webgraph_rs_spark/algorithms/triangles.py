@@ -25,14 +25,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from webgraph_rs_spark.graph import LinkGraph
-from webgraph_rs_spark.algorithms.components import _sym_edges
 
 
 def _oriented_edges(g: LinkGraph) -> DataFrame:
     """Undirected edges oriented low->high by (degree, id); columns (a, b)."""
-    # hash(src)-partitioned symmetrize (one exchange) — the degree groupBy
-    # then aggregates in place with no further shuffle of the edge table
-    sym = _sym_edges(g, partition_by="src")  # both directions present
+    # the graph's hash(src)-partitioned symmetrized view — the degree
+    # groupBy aggregates in place with no further shuffle of the edge table
+    sym = g.sym_edges()  # both directions present
     deg = sym.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
     e = (
         sym.join(deg.withColumnRenamed("id", "src").withColumnRenamed("deg", "ds"), "src")

@@ -14,8 +14,8 @@ loop is a first-class driver object that:
 - appends a manifest line per iteration with per-partition row counts +
   metrics + wall time (the "per-partition lineage + metrics" contract),
 - resumes from the latest *complete* checkpoint after a kill: the manifest
-  line is written only after the parquet commit, so a torn write is invisible
-  and re-done.
+  line is written once, only after the parquet commit and its metrics, so a
+  torn write is invisible and re-done.
 
 At cluster scale the checkpoint store would be an Iceberg table (snapshot =
 iteration); parquet-dir-per-iteration is the same design with the manifest
@@ -25,6 +25,7 @@ image — the store is pluggable via ``CheckpointStore``.)
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -135,14 +136,24 @@ class CheckpointStore:
     def state_path(self, iteration: int) -> str:
         return os.path.join(self.job_dir, f"iter={iteration:06d}")
 
-    def write(self, state: DataFrame, iteration: int, metrics: dict, wall_ms: float) -> DataFrame:
+    def write(
+        self,
+        state: DataFrame,
+        iteration: int,
+        metrics: dict | Callable[[], dict],
+        wall_ms: float,
+    ) -> DataFrame:
         """Commit state for ``iteration``; returns the re-read (lineage-free) DF.
 
-        The manifest line is appended only after the parquet write returns,
-        making it the completion marker for resume.
+        The manifest line is appended once, only after the parquet write
+        returns, making it the completion marker for resume. ``metrics`` may
+        be a callable resolving observed metrics: the parquet write is the
+        action that resolves them, so it is called after the write.
         """
         path = self.state_path(iteration)
         state.write.mode("overwrite").parquet(path)
+        if callable(metrics):
+            metrics = metrics()
         reread = state.sparkSession.read.parquet(path)
         # per-partition lineage: rows per partition of the committed state
         part_rows = {
@@ -164,30 +175,6 @@ class CheckpointStore:
         with open(self.manifest_path, "a", encoding="utf-8") as f:
             f.write(json.dumps(line) + "\n")
         return reread
-
-    def update_metrics(self, iteration: int, metrics: dict) -> None:
-        """Backfill the metrics of an already-committed iteration.
-
-        Observe-mode steps resolve their metrics only AFTER the
-        materializing action (i.e. after ``write`` already appended the
-        manifest line with ``{}``); without this backfill a resume would
-        see empty metrics for checkpoint-boundary iterations and a
-        metric-based stop check could never fire at resume time.
-        Rewrite-in-place via temp file + atomic rename.
-        """
-        entries = self.manifest()
-        changed = False
-        for m in entries:
-            if m.get("iteration") == iteration and m.get("complete"):
-                m["metrics"] = {k: _jsonable(v) for k, v in metrics.items()}
-                changed = True
-        if not changed:
-            return
-        tmp = self.manifest_path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            for m in entries:
-                f.write(json.dumps(m) + "\n")
-        os.replace(tmp, self.manifest_path)
 
     def manifest(self) -> list[dict]:
         if not os.path.exists(self.manifest_path):
@@ -368,71 +355,60 @@ def iterate(
     # policy) turned any lost cache block of a live state into an
     # unrecoverable 'checkpoint block not found' failure. Their release is
     # DEFERRED until the next truncation makes the live state
-    # self-contained again. Every stop path truncates the final state
-    # (do_ckpt on dict-metrics stops, the late-commit on observe-metrics
-    # stops), so the deferred list is always flushed by loop end except on
-    # the max_safety_iter valve, where leaking beats failing.
+    # self-contained again. Every exit truncates the final state (do_ckpt
+    # on dict-metrics stops and on the max_safety_iter valve, the late
+    # commit on observe-metrics stops), so the deferred list is always
+    # flushed by loop end.
     held_trunc: list[DataFrame] = []
     prev_is_trunc = False
     cur_is_trunc = False
+
+    def _truncate(
+        df: DataFrame, it: int, metrics: dict | Callable[[], dict], t0: float
+    ) -> DataFrame:
+        if store is not None:
+            committed = store.write(df, it, metrics, (time.monotonic() - t0) * 1000.0)
+            df.unpersist()
+            return committed.persist()
+        # No durable store: still truncate lineage, or the logical plan
+        # (and driver stack at analysis time) grows without bound in
+        # iterative jobs. Materialize into the cache FIRST, then
+        # localCheckpoint — checkpointing from the cache is ~30x cheaper
+        # than letting localCheckpoint re-execute the plan itself
+        # (measured: 0.5s vs 15s on a 2M-row state). ONE action: the eager
+        # localCheckpoint executes through the just-persisted cache
+        # (populating it on the way), truncates lineage, and — verified —
+        # resolves any attached observe metrics; a separate count() first
+        # would be a second job.
+        out = df.localCheckpoint(eager=True)
+        df.unpersist()
+        return out
+
     while it < max_safety_iter:
         t0 = time.monotonic()
         new_state, metrics = step(state, it)
         it += 1
         maybe_explain(new_state, f"{job}_iter{it:03d}")
-        metrics_fn = metrics if callable(metrics) else None
+        observed = callable(metrics)
+        if observed:
+            # resolved by the loop's own materializing action; memoized so
+            # the store's manifest line and the stop check share one call
+            metrics = functools.cache(metrics)
         new_state = new_state.persist()
-        new_is_trunc = False
-        do_ckpt = it % trunc == 0 or (
-            metrics_fn is None and stop.should_stop(it, metrics)
+        new_is_trunc = (
+            it % trunc == 0
+            or it >= max_safety_iter
+            or (not observed and stop.should_stop(it, metrics))
         )
-
-        def _truncate(df: DataFrame) -> DataFrame:
-            # No durable store: still truncate lineage, or the logical plan
-            # (and driver stack at analysis time) grows without bound in
-            # iterative jobs. Materialize into the cache FIRST, then
-            # localCheckpoint — checkpointing from the cache is ~30x cheaper
-            # than letting localCheckpoint re-execute the plan itself
-            # (measured: 0.5s vs 15s on a 2M-row state).
-            unp = df
-            out = df.localCheckpoint(eager=True)
-            unp.unpersist()
-            return out
-
-        if store is not None and do_ckpt:
-            committed = store.write(
-                new_state, it, metrics if metrics_fn is None else {},
-                (time.monotonic() - t0) * 1000.0,
-            )
-            new_state.unpersist()
-            new_state = committed.persist()
-            new_is_trunc = True
-        elif do_ckpt:
-            # ONE action: the eager localCheckpoint executes through the
-            # just-persisted cache (populating it on the way), truncates
-            # lineage, and — verified — resolves any attached observe
-            # metrics; a separate count() first would be a second job.
-            new_state = _truncate(new_state)
-            new_is_trunc = True
+        if new_is_trunc:
+            new_state = _truncate(new_state, it, metrics, t0)
         else:
             new_state.count()  # materialize before dropping the parent
-        if metrics_fn is not None:
-            # observed aggregates were collected by the materializing action
-            metrics = metrics_fn()
-            if store is not None and do_ckpt:
-                # the manifest line for this iteration was written with {}
-                # before the metrics resolved — backfill so resume sees them
-                store.update_metrics(it, metrics)
-            if not do_ckpt and stop.should_stop(it, metrics):
-                # late commit: the loop ends now, make the state durable
-                if store is not None:
-                    committed = store.write(
-                        new_state, it, metrics, (time.monotonic() - t0) * 1000.0
-                    )
-                    new_state.unpersist()
-                    new_state = committed.persist()
-                else:
-                    new_state = _truncate(new_state)
+        if observed:
+            metrics = metrics()
+            if not new_is_trunc and stop.should_stop(it, metrics):
+                # late commit: the loop ends now, truncate the final state
+                new_state = _truncate(new_state, it, metrics, t0)
                 new_is_trunc = True
         if prev is not None:
             if prev_is_trunc:
@@ -455,8 +431,6 @@ def iterate(
             break
     if prev is not None:
         release_state(prev)
-    if cur_is_trunc:
-        for df in held_trunc:
-            release_state(df)
-        held_trunc.clear()
+    for df in held_trunc:
+        release_state(df)
     return IterationResult(state, it, metrics_history, resumed_from)

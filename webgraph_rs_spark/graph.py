@@ -18,6 +18,14 @@ Reference mapping (SURVEY.md §1.5):
 At 100 TB scale the edge table is the large fact table; every algorithm in
 this package joins it on ``src`` — keeping it persisted hash-partitioned by
 ``src`` means the per-iteration gather join never re-shuffles the edges side.
+
+Ownership rule: a :class:`LinkGraph` owns the edge tables derived from it.
+:meth:`LinkGraph.src_edges` (hash(src)-partitioned) and
+:meth:`LinkGraph.sym_edges` (symmetrized) are built and persisted once, on
+first use, and every algorithm borrows them — none persists, counts or
+unpersists a shared edge table. ``g.unpersist()`` frees them, together with
+the graph's own edges and vertices. The views assume algorithms on one graph
+run sequentially, the model everywhere in this engine.
 """
 
 from __future__ import annotations
@@ -38,6 +46,11 @@ class LinkGraph:
 
     ``edges`` columns: ``src:long, dst:long`` (deduped).
     ``vertices`` columns: ``id:long`` (includes dangling/isolated nodes).
+
+    The graph owns its derived views (:meth:`src_edges`,
+    :meth:`sym_edges`): each is persisted once and shared by every
+    algorithm run on the graph, which borrows it and never releases it;
+    :meth:`unpersist` frees them.
     """
 
     edges: DataFrame
@@ -45,12 +58,13 @@ class LinkGraph:
     _num_nodes: int | None = field(default=None, repr=False)
     _num_arcs: int | None = field(default=None, repr=False)
     # True when ``edges`` is known to be hash-partitioned by ``src`` (the
-    # canonical layout). Algorithms that need that layout then reuse
-    # ``edges`` directly — when the caller persisted the graph (the normal
-    # pattern) this skips a per-operator re-shuffle AND a duplicate cache
-    # of the edge table (guide §2.4 "two operations keyed the same way can
-    # share one exchange").
+    # canonical layout): ``src_edges()`` is then ``edges`` itself, so no
+    # algorithm re-shuffles or double-caches the edge table (guide §2.4
+    # "two operations keyed the same way can share one exchange").
     src_layout: bool = field(default=False, repr=False)
+    _views: dict[str, DataFrame] = field(
+        default_factory=dict, init=False, repr=False, compare=False
+    )
 
     # -- cardinalities (reference: labels.rs:96-101; cached like `.properties`)
     @property
@@ -98,12 +112,44 @@ class LinkGraph:
             self.edges.filter((F.col("src") == src) & (F.col("dst") == dst)).take(1)
         )
 
+    # -- derived edge views (owned by the graph, borrowed by algorithms)
+    def _view(self, name: str, build) -> DataFrame:
+        if name not in self._views:
+            self._views[name] = build().persist()
+        return self._views[name]
+
+    def src_edges(self) -> DataFrame:
+        """``edges`` hash-partitioned by ``src``, persisted: ``edges``
+        itself in the canonical layout, else one re-partitioned copy."""
+        return self._view(
+            "src", lambda: self.edges if self.src_layout else self.edges.repartition("src")
+        )
+
+    def sym_edges(self) -> DataFrame:
+        """Both directions, no self-loops, deduped, hash-partitioned by
+        ``src``, persisted.
+
+        Partitioning BEFORE the dedup lands the whole symmetrize in ONE
+        exchange: the hash(src) distribution already satisfies the
+        (src, dst) clustering the dedup aggregate needs (guide §2.4)."""
+
+        def build() -> DataFrame:
+            t = self.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            e = self.edges.unionByName(t).filter(F.col("src") != F.col("dst"))
+            return e.repartition("src").dropDuplicates(["src", "dst"])
+
+        return self._view("sym", build)
+
     def persist(self) -> "LinkGraph":
         self.edges.persist()
         self.vertices.persist()
         return self
 
     def unpersist(self) -> "LinkGraph":
+        """Free the graph's own tables and every derived view."""
+        for v in self._views.values():
+            v.unpersist()
+        self._views.clear()
         self.edges.unpersist()
         self.vertices.unpersist()
         return self
@@ -132,36 +178,6 @@ def canonical_edge_layout(edges: DataFrame, num_partitions: int | None = None) -
     else:
         e = e.repartition("src")
     return e.dropDuplicates(["src", "dst"]).sortWithinPartitions("src", "dst")
-
-
-def edges_by_src(g: LinkGraph) -> tuple[DataFrame, bool]:
-    """A persisted, hash(src)-partitioned view of ``g.edges``.
-
-    Returns ``(edges, owned)``: ``owned=False`` means the graph's own edge
-    table was reused (it is already in the canonical src layout and already
-    persisted by the caller — do NOT unpersist it); ``owned=True`` means this
-    call persisted something (either ``g.edges`` itself or a re-partitioned
-    copy) that the consumer must unpersist when done.
-
-    Guide §2.4: algorithms used to unconditionally
-    ``g.edges.repartition("src").persist()`` — on a canonical, caller-
-    persisted graph that re-shuffled and double-cached the (at scale,
-    dominant) edge table once per operator.
-
-    Ownership is decided from ``g.edges.is_cached`` at call time, which
-    assumes operators on one graph run SEQUENTIALLY (the model everywhere
-    in this engine): with two operators racing on the same uncached
-    graph, the first's cleanup could unpersist the table under the
-    second (correct results, silent recompute cost). Callers running
-    operators concurrently should persist the graph themselves first.
-    """
-    if g.src_layout:
-        if g.edges.is_cached:
-            return g.edges, False
-        g.edges.persist()
-        return g.edges, True
-    e = g.edges.repartition("src").persist()
-    return e, True
 
 
 def from_edges(

@@ -53,7 +53,7 @@ def remove_self_loops(g: LinkGraph) -> LinkGraph:
         g.edges.filter(F.col("src") != F.col("dst")), g.vertices,
         _num_nodes=g._num_nodes,
         # a filter preserves the parent's partitioning, so the canonical
-        # flag carries over (the cache does not — consumers re-persist)
+        # flag carries over (the views do not — the new graph builds its own)
         src_layout=g.src_layout,
     )
 
