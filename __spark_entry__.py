@@ -868,14 +868,18 @@ def _q_page_links(spark, sf):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Dict ORDER is deliberate: the driver's correctness run caps at 50 of
-    # the registry's entries, so the queries that did NOT get a driver row
-    # in the previous round's CORRECTNESS_r* run must execute FIRST; the
-    # just-gated queries rotate to the tail. r6 priority set = the 20
-    # queries CORRECTNESS_r05's cap did not reach (exactly the registry
-    # keys absent from that file — pinned by tests/test_registry.py
-    # ``test_rotation_covers_last_rounds_missed_queries``).
-    r6_priority = {
+    return {
+        "graph_edges": _q_edges,
+        "graph_degrees": _q_degrees,
+        "graph_stats": _q_stats,
+        "degree_distribution": _q_degree_dist,
+        "transpose": _q_transpose,
+        "symmetrize": _q_symmetrize,
+        "union_graphs": _q_union,
+        "permute": _q_permute,
+        "contract": _q_contract,
+        "check_symm": _q_check_symm,
+        "successors_0": _q_successors0,
         "pagerank": _q_pagerank,
         "pagerank_topk": _q_pagerank_topk,
         "pagerank_pseudo": _q_pagerank_pseudo,
@@ -889,58 +893,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bfs_from_0": _q_bfs,
         "bfs_tree_from_0": _q_bfs_tree,
         "bfs_order_from_0": _q_bfs_order,
+        "bfs_events_from_0": _q_bfs_events,
         "locality_stats": _q_locality,
         "scc_labels": _q_scc,
         "scc_labels_dense": _q_scc_dense,
         "scc_renumbered": _q_scc_renumbered,
+        "scc_condensation": _q_scc_condensation,
         "sumsweep_radius_diameter": _q_sumsweep_rd,
         "sumsweep_ecc_all": _q_sumsweep_ecc,
         "sumsweep_ecc_backward": _q_sumsweep_becc,
-    }
-    r5_priority = {
-        "bv_cnr2000_stats": _q_bv_stats,
         "topo_levels": _q_topo,
         "intern_string_graph": _q_intern,
         "perm_compose": _q_perm_compose,
-        **{
-            k: v
-            for k, v in _TEXTOPS_QUERIES.items()
-            if k
-            in (
-                "ivf_ann_topk",
-                "multimodal_meta",
-                "frame_sample_meta",
-                "audio_features",
-                "rolling_fingerprints",
-                "duplicate_spans",
-            )
-        },
-        **_DIST_QUERIES,
-    }
-    return {
-        **r6_priority,
-        "bfs_events_from_0": _q_bfs_events,
-        "scc_condensation": _q_scc_condensation,
+        "bv_cnr2000_stats": _q_bv_stats,
         "events_window": _q_events_window,
         "page_text_extraction": _q_page_text,
         "page_link_extraction": _q_page_links,
-        **{
-            k: v
-            for k, v in _TEXTOPS_QUERIES.items()
-            if k not in r5_priority
-        },
-        "graph_edges": _q_edges,
-        "graph_degrees": _q_degrees,
-        "graph_stats": _q_stats,
-        "degree_distribution": _q_degree_dist,
-        "transpose": _q_transpose,
-        "symmetrize": _q_symmetrize,
-        "union_graphs": _q_union,
-        "permute": _q_permute,
-        "contract": _q_contract,
-        "check_symm": _q_check_symm,
-        "successors_0": _q_successors0,
-        **r5_priority,
+        **_TEXTOPS_QUERIES,
+        **_DIST_QUERIES,
     }
 
 

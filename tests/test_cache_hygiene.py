@@ -45,26 +45,33 @@ def test_no_storage_growth_across_graph_ops(spark):
     g.unpersist()
 
 
+def _n_persist_since(spark, floor: int) -> int:
+    """Persistent RDDs with an id above ``floor``. Earlier tests' RDDs do not
+    count: the JVM's ContextCleaner frees their dead ones asynchronously, at
+    any point of a later test."""
+    ids = spark.sparkContext._jsc.getPersistentRDDs().keySet()
+    return sum(1 for i in ids if i > floor)
+
+
 def test_graph_owns_one_symmetrized_view(spark):
     """CC, LP and triangles share the graph's one symmetrized view: it is
     the only table cached above the graph's own, and ``g.unpersist()``
     frees it with them."""
-    spark.sparkContext._jvm.System.gc()  # drop earlier tests' dead RDDs
-    before = _n_persist(spark)
+    floor = spark.sparkContext.emptyRDD().id()  # every later RDD id is higher
     g = pref_attach_like(spark, 400, out_deg=4, seed=11).persist()
     g.edges.count()
     g.vertices.count()
-    own = _n_persist(spark)
+    own = _n_persist_since(spark, floor)
     cc = connected_components(g)
     release_state(cc.labels)
-    assert _n_persist(spark) == own + 1
+    assert _n_persist_since(spark, floor) == own + 1
     lp = label_propagation(g, max_iter=3)
     release_state(lp.labels)
-    assert _n_persist(spark) == own + 1
+    assert _n_persist_since(spark, floor) == own + 1
     triangle_count(g)
-    assert _n_persist(spark) == own + 1
+    assert _n_persist_since(spark, floor) == own + 1
     g.unpersist()
-    assert _n_persist(spark) == before
+    assert _n_persist_since(spark, floor) == 0
 
 
 def test_llp_releases_losing_labelings(spark):

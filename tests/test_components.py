@@ -13,6 +13,7 @@ from webgraph_rs_spark.algorithms import (
     cc_star,
     component_sizes,
     connected_components,
+    label_propagation,
     renumber_by_size,
 )
 
@@ -117,6 +118,50 @@ def test_cc_resume_with_chg_state_schema(spark, tmp_path):
     resumed = connected_components(g, checkpoint_dir=ck, job="cc", resume=True)
     assert resumed.resumed_from == 2
     assert resumed.labels.columns == ["id", "label"]
+    assert (
+        _labels_array(resumed.labels, n).tolist()
+        == _labels_array(full.labels, n).tolist()
+    )
+
+
+@pytest.mark.parametrize(
+    "algo, frontier_cols",
+    [
+        (connected_components, ["_chg"]),
+        (label_propagation, ["_chg", "_prop"]),
+    ],
+)
+def test_resume_checkpoint_without_frontier_columns(spark, tmp_path, algo, frontier_cols):
+    """A checkpoint written before the state carried its frontier columns
+    resumes as a full rescan and reaches the uninterrupted labels. (LP's
+    first resumed round rescans without reading the columns; CC adds
+    ``_chg = true``.)"""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from webgraph_rs_spark.driver import CheckpointStore
+
+    n, edges = erdos_renyi(60, 0.05, seed=11)
+    g = graph_from_pandas(spark, edges, n)
+    ck = str(tmp_path / "ck")
+    full = algo(g)
+    algo(g, max_iter=2, checkpoint_dir=ck, job="old")
+    # rewrite the committed state in the old format, without the columns
+    path = CheckpointStore(ck, "old").state_path(2)
+    for name in os.listdir(path):
+        if name.startswith("part-"):
+            part = os.path.join(path, name)
+            # the schema metadata holds Spark's own copy of the old schema
+            old = pq.read_table(part).drop_columns(frontier_cols)
+            pq.write_table(old.replace_schema_metadata(), part)
+            crc = os.path.join(path, f".{name}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)  # the local FS would reject the stale checksum
+    assert not set(frontier_cols) & set(spark.read.parquet(path).columns)
+
+    resumed = algo(g, checkpoint_dir=ck, job="old", resume=True)
+    assert resumed.resumed_from == 2
     assert (
         _labels_array(resumed.labels, n).tolist()
         == _labels_array(full.labels, n).tolist()

@@ -40,6 +40,10 @@ def test_pages_roundtrip_recovers_planted_graph(spark):
     g, d = build_graph_from_pages(spark, pages)
     assert g.num_nodes == n
     assert g.num_arcs == len(edges)
+    # text and links come from ONE Python evaluation of the fused UDF
+    plan = g.edges._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1
+    assert plan.count("extract_both_udf(") == 1
     # map dictionary ids back to planted node ids via the url scheme
     url2node = {url_for(i): i for i in range(n)}
     rows = d.collect()

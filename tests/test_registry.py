@@ -37,35 +37,6 @@ def test_oracle_sql_literal_keys_unique():
     assert not dupes, f"duplicate keys in oracle_sql() literal: {dupes}"
 
 
-def test_rotation_covers_last_rounds_missed_queries():
-    # The driver caps correctness runs at 50 queries. Whatever the LAST
-    # round's CORRECTNESS file did not reach must lead the registry this
-    # round, so every query gets a driver-executed green row across
-    # consecutive rounds. Computed from the set difference, so the pin
-    # cannot go stale when queries are added or the cap moves.
-    import importlib.util
-    import json
-    import re
-
-    repo = ENTRY.parent
-    runs = sorted(repo.glob("CORRECTNESS_r*.json"))
-    assert runs, "no CORRECTNESS_r*.json on record"
-    last = max(runs, key=lambda p: int(re.search(r"r(\d+)", p.name).group(1)))
-    gated_last_round = set(json.loads(last.read_text()).keys())
-
-    spec = importlib.util.spec_from_file_location("_entry_rot", ENTRY)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    order = list(mod.queries().keys())
-    missed = set(order) - gated_last_round
-    head = set(order[: len(missed)])
-    assert head == missed, (
-        f"registry head must be exactly the queries {last.name} missed; "
-        f"misplaced: {sorted(missed - head)} should lead, "
-        f"{sorted(head - missed)} should rotate to the tail"
-    )
-
-
 def test_every_query_runs_or_is_documented():
     # every oracle_sql key must be a queries() key (dangling SQL would
     # never be compared by the driver)

@@ -1,9 +1,11 @@
-"""Physical-plan audit: summarize executed plans for the key operators and
-write BENCH/PLANS.md. Checks the properties the 100 TB design depends on:
+"""Physical-plan audit: summarize executed plans for the key operators as
+markdown. Checks the properties the 100 TB design depends on:
 pushed filters / pruned columns at the scan, join strategies, exchange
 counts per operator.
 
-Usage: PYTHONPATH=. python tools/explain_audit.py
+Usage: PYTHONPATH=. python tools/explain_audit.py [out_md]
+
+Writes the report to ``out_md`` when given, else to stdout.
 """
 
 from __future__ import annotations
@@ -49,6 +51,8 @@ def summarize(name: str, df, notes: str) -> str:
 
 
 def main() -> int:
+    out_path = sys.argv[1] if len(sys.argv) > 1 else None
+
     from pyspark.sql import functions as F
     from webgraph_rs_spark.session import get_spark
     from webgraph_rs_spark.testgraphs import lineitem_graph
@@ -58,7 +62,7 @@ def main() -> int:
     g.edges.persist().count()
 
     out = [
-        "# BENCH/PLANS.md — physical-plan audit of key operators",
+        "# Physical-plan audit of key operators",
         "",
         "Generated by `tools/explain_audit.py` at sf0.01 (plan *shapes* are",
         "scale-independent; strategies that are broadcast here become",
@@ -215,10 +219,12 @@ def main() -> int:
         )
     )
 
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open("/root/repo/BENCH/PLANS.md", "w", encoding="utf-8") as f:
-        f.write("\n".join(out))
-    print("wrote BENCH/PLANS.md")
+    report = "\n".join(out)
+    if out_path:
+        with open(out_path, "w", encoding="utf-8") as f:
+            f.write(report)
+    else:
+        print(report)
     return 0
 
 

@@ -3,12 +3,12 @@
 Usage: python tools/scaling_job.py <cores> [out_json]
 
 Builds a deterministic synthetic graph (no external data): 2^21 nodes,
-16 out-edges per node via affine hash formulas plus a planted hub (node 0
+64 out-edges per node via affine hash formulas plus a planted hub (node 0
 gets ~260k in-links => web-like skew), then measures:
 
 - PageRank power iterations — per-iteration wall times; MIN is reported as
-  the capability estimate because the sandbox host shows intermittent
-  multi-second interference bursts (see BENCH/BASELINE.md);
+  the capability estimate because a shared host shows intermittent
+  multi-second interference bursts;
 - pages synthesis + link/text extraction over a 400k-page slice (the
   pandas-UDF ingestion frontend), 3 warm repetitions, min.
 
@@ -33,14 +33,14 @@ N_NODES = int(os.environ.get("SCALING_N_NODES", 1 << 21))
 OUT_DEG = int(os.environ.get("SCALING_OUT_DEG", 64))
 # FIXED across parallelism levels by default (see the comment at get_spark
 # below); override to probe whether partition count, not hardware, is the
-# limiter at high core counts (the 8->32 leg diagnosis, BENCH/BASELINE.md)
+# limiter at high core counts (the 8->32 leg diagnosis, RESULTS.md)
 PARTITIONS = int(os.environ.get("SCALING_PARTITIONS", 16))
 PAGES_NODES = 400_000
 PR_WARMUP = 2
 PR_TIMED = 8
 EXTRACT_REPS = 3
 # pandas-UDF stages peak at ~8 python workers per JVM (Arrow socket + fork
-# contention past that — see BENCH/BASELINE.md); at higher core counts the
+# contention past that); at higher core counts the
 # extraction input is ALSO run coalesced to this many partitions to
 # demonstrate the documented executor-sizing fix (4-8 cores/executor).
 UDF_WORKER_CAP = 8

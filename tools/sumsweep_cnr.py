@@ -4,7 +4,7 @@ VERDICT r4 stretch item 9: no golden radius/diameter ships with the
 reference data, so the value of this run is demonstrating CERTIFIED
 convergence (bounds closed, not sampled) at 325k nodes / 3.2M arcs on
 the production ingest path, and recording the pivot count + wall time
-in BENCH/BASELINE.md.
+in the JSON line it prints.
 
 Usage: python tools/sumsweep_cnr.py [out_json]
 """

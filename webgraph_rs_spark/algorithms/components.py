@@ -63,8 +63,10 @@ def connected_components(
     driver-managed (persisted/truncated) state instead of maintaining a
     separately checkpointed frontier table, and the ``modified`` count
     rides the driver's own materializing action as an ``observe`` metric.
-    One Spark job per round, where the old shape paid three (frontier
-    checkpoint + count + state materialization).
+    One Spark action per round, where the old shape paid three (frontier
+    checkpoint + count + state materialization). AQE runs each query stage
+    of that action as a Spark job of its own, so a round measures about
+    7.5 jobs (pinned in ``tests/test_job_counts.py``).
     """
     from pyspark.sql import Observation
 
@@ -76,6 +78,10 @@ def connected_components(
     fr_n: dict = {"n": None}  # last round's frontier size (observe metric)
 
     def step(state: DataFrame, it: int):
+        if "_chg" not in state.columns:
+            # a checkpoint written before the frontier column: mark every
+            # node changed — a full rescan, exact by monotonicity
+            state = state.withColumn("_chg", F.lit(True))
         src_labels = state.filter(F.col("_chg")).select("id", "label")
         if fr_n["n"] is not None and fr_n["n"] <= 1_000_000:
             src_labels = F.broadcast(src_labels)

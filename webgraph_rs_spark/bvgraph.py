@@ -1773,8 +1773,8 @@ def write_bvgraph(
     Cost model at scale: the per-range compressor runs the vectorized
     NumPy cost/emission passes (:mod:`webgraph_rs_spark.bvcost`) at
     ~80k nodes/s/core steady-state on cnr-2000 (the scalar BitCounter
-    reference path it byte-matches measures ~35-40k; serialized
-    alternating A/Bs in BENCH/BASELINE.md r5) — an export, like the
+    reference path it byte-matches measures ~35-40k in serialized
+    alternating A/Bs) — an export, like the
     ingest, is a one-time boundary crossing, and ranges parallelize
     perfectly (1000 executor cores ≈ 8*10^7 nodes/s ≈ 20 min per
     10^11 nodes); the stitch streams at disk speed with O(chunk) driver

@@ -46,11 +46,8 @@ _HREF_RE = re.compile(r"(?is)<a\s[^>]*?href\s*=\s*\"([^\"]*)\"")
 _SPACES_RE = re.compile(r"[ \t\r\f\v]+")
 
 
-def extract_text_py(html_bytes: bytes | None) -> str:
-    """Pure-python text extraction implementing the spec above."""
-    if html_bytes is None:
-        return ""
-    s = html_bytes.decode("utf-8", errors="replace")
+def _text_of(s: str) -> str:
+    """Steps 2-6 of the text spec over the decoded page."""
     s = _SCRIPT_RE.sub(" ", s)
     s = _COMMENT_RE.sub(" ", s)
     s = _BLOCK_TAG_RE.sub("\n", s)
@@ -64,12 +61,23 @@ def extract_text_py(html_bytes: bytes | None) -> str:
     return "\n".join(lines)
 
 
-def extract_links_py(html_bytes: bytes | None) -> list[str]:
-    if html_bytes is None:
-        return []
-    s = html_bytes.decode("utf-8", errors="replace")
+def _links_of(s: str) -> list[str]:
+    """Every ``<a href>`` target of the decoded page, in document order."""
     s = _COMMENT_RE.sub(" ", s)
     return [_htmlmod.unescape(m) for m in _HREF_RE.findall(s)]
+
+
+def _decode(html_bytes: bytes) -> str:
+    return html_bytes.decode("utf-8", errors="replace")
+
+
+def extract_text_py(html_bytes: bytes | None) -> str:
+    """Pure-python text extraction implementing the spec above."""
+    return "" if html_bytes is None else _text_of(_decode(html_bytes))
+
+
+def extract_links_py(html_bytes: bytes | None) -> list[str]:
+    return [] if html_bytes is None else _links_of(_decode(html_bytes))
 
 
 @F.pandas_udf(ST.StringType())
@@ -95,30 +103,13 @@ def extract_both_udf(html: pd.Series) -> pd.DataFrame:
     """text + links in ONE Python evaluation (guide §4.1): the html bytes
     cross the JVM->Arrow->Python boundary once instead of twice, and the
     utf-8 decode is shared. Values are byte-identical to the two split UDFs
-    (same ``extract_*_py`` pipelines over the same decoded string)."""
+    (the same ``_text_of`` / ``_links_of`` over the same decoded string)."""
     texts: list[str] = []
     links: list[list[str]] = []
     for hb in html:
-        if hb is None:
-            texts.append("")
-            links.append([])
-            continue
-        s = hb.decode("utf-8", errors="replace")
-        # text pipeline (extract_text_py over the shared decode)
-        t = _SCRIPT_RE.sub(" ", s)
-        t = _COMMENT_RE.sub(" ", t)
-        t = _BLOCK_TAG_RE.sub("\n", t)
-        t = _ANY_TAG_RE.sub(" ", t)
-        t = _htmlmod.unescape(t)
-        lines = []
-        for line in t.split("\n"):
-            line = _SPACES_RE.sub(" ", line).strip()
-            if line:
-                lines.append(line)
-        texts.append("\n".join(lines))
-        # links pipeline (extract_links_py over the shared decode)
-        ls = _COMMENT_RE.sub(" ", s)
-        links.append([_htmlmod.unescape(m) for m in _HREF_RE.findall(ls)])
+        s = "" if hb is None else _decode(hb)
+        texts.append(_text_of(s))
+        links.append(_links_of(s))
     return pd.DataFrame({"text": texts, "links": links})
 
 
