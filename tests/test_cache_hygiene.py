@@ -6,12 +6,16 @@ returned vertex-sized handles are caller-owned and released explicitly with
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from webgraph_rs_spark.driver import release_state
 from webgraph_rs_spark.generators import pref_attach_like
+from webgraph_rs_spark.graph import graph_from_pandas
 from webgraph_rs_spark.algorithms import (
+    birank,
     connected_components,
+    hyperball,
     label_propagation,
     llp,
     strongly_connected_components,
@@ -72,6 +76,45 @@ def test_graph_owns_one_symmetrized_view(spark):
     assert _n_persist_since(spark, floor) == own + 1
     g.unpersist()
     assert _n_persist_since(spark, floor) == 0
+
+
+@pytest.mark.parametrize("systolic_threshold", [0.0, 0.75])
+def test_hyperball_releases_every_state(spark, systolic_threshold):
+    """12 rounds on a 24-node chain, so the ball keeps growing: dense
+    rounds only (0.0), or dense rounds and then systolic ones once fewer
+    than 3/4 of the counters change (0.75). Every state, truncated or
+    cached, is released by the end."""
+    n = 24
+    g = graph_from_pandas(spark, [(i, i + 1) for i in range(n - 1)], n)
+    floor = spark.sparkContext.emptyRDD().id()
+    res = hyperball(
+        g, max_iter=12, rel_tol=0.0, systolic_threshold=systolic_threshold
+    )
+    assert res.iterations == 12
+    if systolic_threshold:
+        assert any(m["systolic"] for m in res.metrics_history)
+    release_state(res.centralities)
+    assert _n_persist_since(spark, floor) == 0
+
+
+def test_birank_storage_does_not_grow_with_iterations(spark):
+    """BiRank caches one item pass per step; each is released once the
+    state computed with it is materialized, so what is left after a run
+    does not depend on how many iterations it ran."""
+    e = spark.createDataFrame(
+        [(u, (u * 7 + k) % 15) for u in range(20) for k in range(3)],
+        "u long, p long",
+    )
+    users, items = spark.range(20), spark.range(15)
+    left = []
+    for max_iter in (4, 12):
+        floor = spark.sparkContext.emptyRDD().id()
+        res = birank(e, users, items, threshold=None, max_iter=max_iter)
+        assert res.iterations == max_iter
+        release_state(res.user_ranks)
+        release_state(res.item_ranks)
+        left.append(_n_persist_since(spark, floor))
+    assert left[0] == left[1], left
 
 
 def test_llp_releases_losing_labelings(spark):

@@ -227,6 +227,49 @@ def test_safety_valve_exit_truncates_final_state(spark):
     assert {r["v"] for r in res.state.collect()} == {5}
 
 
+def test_commit_interval_does_not_set_lineage_depth(spark, tmp_ckpt):
+    """With a store, lineage is still cut every ``truncate_every``
+    iterations: a long commit interval must not let the plan of a step that
+    reads the state twice double every iteration (1, 2, 4, ..., 128 leaves
+    over 8 iterations). Only the due commit is written, and the result
+    equals the run without a store."""
+    from pyspark.sql import functions as F
+
+    state0 = spark.range(16).selectExpr("id", "cast(id as double) as v")
+    leaves: list[int] = []
+
+    def step(state, it):
+        leaves.append(state._jdf.queryExecution().logical().collectLeaves().size())
+        a, b = state.alias("a"), state.alias("b")
+        new = a.join(b, "id").select("id", (F.col("a.v") + F.col("b.v")).alias("v"))
+        return new, {}
+
+    results = {}
+    for d in (tmp_ckpt, None):
+        leaves.clear()
+        res = iterate(
+            spark, state0, step, MaxIter(8), checkpoint_dir=d, job="twice",
+            checkpoint_every=8, truncate_every=2,
+        )
+        assert res.iterations == 8
+        assert max(leaves) <= 2, (d, leaves)
+        results[d] = sorted((r["id"], r["v"]) for r in res.state.collect())
+    assert [m["iteration"] for m in CheckpointStore(tmp_ckpt, "twice").manifest()] == [8]
+    assert results[tmp_ckpt] == results[None] == [(i, i * 256.0) for i in range(16)]
+
+    n, edges = erdos_renyi(200, 0.03, seed=3)
+    g = graph_from_pandas(spark, edges, n)
+    ranks = []
+    for d in (os.path.join(tmp_ckpt, "pr"), None):
+        pr = pagerank(g, threshold=1e-9, max_iter=8, checkpoint_dir=d, checkpoint_every=8)
+        assert pr.iterations == 8
+        r = np.zeros(n)
+        for row in pr.ranks.collect():
+            r[row["id"]] = row["rank"]
+        ranks.append(r)
+    assert np.allclose(ranks[0], ranks[1], rtol=0.0, atol=1e-12)
+
+
 def test_bfs_event_table(spark):
     """events=True materializes the reference's visit-event taxonomy
     (Init/Unknown/Known/FrontierSize, breadth_first/mod.rs:30-183) as a

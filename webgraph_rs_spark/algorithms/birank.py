@@ -116,11 +116,18 @@ def birank(
     e_up = e.select(F.col("u").alias("_f"), F.col("p").alias("_t"))
     e_pu = e.select(F.col("p").alias("_f"), F.col("u").alias("_t"))
 
+    # the last step's cached item pass: it backs only the state computed
+    # with it, which the driver has materialized by the next step
+    p_cache: list[DataFrame] = []
+
     def step(state: DataFrame, it: int):
+        while p_cache:
+            p_cache.pop().unpersist()
         su = state.filter(F.col("side") == "u").select("id", "rank")
         # item update uses the *current* user ranks, then the user update
         # uses the NEW item ranks — the reference's alternating sweep order.
         new_p = _gather(su, mu, mp, e_up, beta, "p").persist()
+        p_cache.append(new_p)
         sp_new = new_p.select("id", "rank")
         new_u = _gather(sp_new, mp, mu, e_pu, alpha, "u")
         new = new_u.unionByName(new_p.select("side", "id", "rank")).persist()
@@ -146,11 +153,12 @@ def birank(
         spark, state0, step, stop, checkpoint_dir=checkpoint_dir, job=job,
         # the alternating sweep embeds the state subplan ~3x per iteration
         # (item pass, its reuse in the user pass, and the L1 join) — plans
-        # grow ~3^K between truncations, so keep K small (driver.py)
+        # grow ~3^K between truncations whatever the commit cadence, so
+        # keep K small (driver.py)
         truncate_every=2,
     )
     ur = res.state.filter(F.col("side") == "u").select("id", "rank")
     pr = res.state.filter(F.col("side") == "p").select("id", "rank")
-    for df in (mu, mp, e):
+    for df in (mu, mp, e, *p_cache):
         df.unpersist()
     return BiRankResult(ur, pr, res.iterations, res.metrics_history)

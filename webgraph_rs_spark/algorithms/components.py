@@ -127,7 +127,8 @@ def connected_components(
         checkpoint_every=checkpoint_every,
         resume=resume,
         # the step embeds the state subplan twice (frontier filter +
-        # adopt join) — plans grow ~2^K between truncations (driver.py)
+        # adopt join) — plans grow ~2^K between truncations whatever the
+        # commit cadence (driver.py)
         truncate_every=3,
     )
     # drop the internal _chg column and hand back a self-contained frame:
@@ -228,7 +229,7 @@ def cc_star(
         resume=resume,
         # the two-star composition embeds the state subplan ~4x per round
         # (bi-direction union + min join, twice) — plans grow ~4^K between
-        # truncations, keep K minimal (driver.py)
+        # truncations whatever the commit cadence, keep K minimal (driver.py)
         truncate_every=2,
     )
     # star forest -> labels; nodes with no edges are their own component.

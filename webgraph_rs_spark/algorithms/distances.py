@@ -31,7 +31,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from webgraph_rs_spark.driver import CheckpointStore, maybe_explain, release_state
+from webgraph_rs_spark.driver import (
+    CheckpointStore,
+    advance_anchor,
+    maybe_explain,
+    release_state,
+)
 from webgraph_rs_spark.graph import LinkGraph
 
 # ----------------------------------------------------------- exact distances
@@ -369,12 +374,7 @@ def hyperball(
     # (its ``_moved`` column); only a resume materializes a standalone
     # checkpoint for it, tracked in ``changed_own`` for release.
     changed_own: DataFrame | None = changed
-    # Deferred-release list for truncation products (same policy as
-    # driver.iterate): a localCheckpoint state whose blocks back the
-    # lineage of the persist-only states that follow it is released only
-    # once the live state is self-contained again.
-    held_trunc: list[DataFrame] = []
-    state_is_trunc = True  # the seed state is a localCheckpoint
+    anchor = state  # the last truncation product (driver.advance_anchor)
     from pyspark.sql import Observation
 
     for t in range(start_t + 1, max_iter + 1):
@@ -472,26 +472,16 @@ def hyperball(
         changed = acc.filter(F.col("_moved")).select("id")
 
         old_state = state
-        old_was_trunc = state_is_trunc
         if systolic:
             state = (
                 old_state.join(recomputed.select("id"), "id", "left_anti")
                 .unionByName(recomputed)
                 .localCheckpoint()
             )
-            state_is_trunc = True
             release_state(recomputed)
         else:
             state = recomputed
-            state_is_trunc = t % 3 == 0
-        if old_was_trunc and not state_is_trunc:
-            held_trunc.append(old_state)  # live state's lineage roots here
-        else:
-            release_state(old_state)
-        if state_is_trunc and held_trunc:
-            for df in held_trunc:
-                release_state(df)
-            held_trunc.clear()
+        anchor = advance_anchor(anchor, old_state, state, systolic or t % 3 == 0)
 
         total = nf[-1] + grew_abs
         rel_grow = grew_abs / max(nf[-1], 1.0)
@@ -516,9 +506,7 @@ def hyperball(
             break
     release_state(changed_own)
     release_state(state)
-    for df in held_trunc:  # nothing references them once state is gone
-        release_state(df)
-    held_trunc.clear()
+    release_state(anchor)  # is ``state`` when the last round truncated
     edges.unpersist()
     cent_plan = acc.select(
         "id",
@@ -847,7 +835,6 @@ def exact_sum_sweep(
     mode: str = "radius_diameter",
     batch: int = 32,
     max_pivots: int = 4096,
-    use_scc: bool | None = None,
     verbose: bool = False,
 ) -> SumSweepResult:
     """Exact forward eccentricities / radius / diameter over ALL nodes by
@@ -906,8 +893,7 @@ def exact_sum_sweep(
     modes — triangle-family bounds cannot certify an upper bound below
     d(v, pivot) + ecc(pivot), and the batch selector already makes the
     extremal nodes exact directly. The rules were removed rather than
-    shipped as dead weight (``use_scc`` is accepted and ignored for API
-    stability). Eccentricity-regular graphs (all ecc equal — no
+    shipped as dead weight. Eccentricity-regular graphs (all ecc equal — no
     extremal structure to exploit, the known SumSweep worst case)
     degrade gracefully to batched all-sources BFS and remain exact.
 
@@ -927,18 +913,6 @@ def exact_sum_sweep(
 
     if mode not in ("radius_diameter", "all", "all_forward"):
         raise ValueError(mode)
-    if use_scc is not None:
-        # Deprecated no-op: SCC-DAG tightening measured ZERO pivot
-        # reduction on 4 fixture families (r3 negative result) and was
-        # removed; the parameter remains one release for API stability.
-        import warnings
-
-        warnings.warn(
-            "exact_sum_sweep(use_scc=...) is deprecated and ignored "
-            "(measured no benefit; see docstring)",
-            DeprecationWarning,
-            stacklevel=2,
-        )
     spark = g.edges.sparkSession
     # self-loops never affect eccentricities (d(v,v) = 0) but would break
     # the fl = 1 init below — drop them up front

@@ -283,6 +283,7 @@ def label_propagation(
         resume=resume,
         # the step embeds the state subplan twice (gather + adopt join),
         # plus the volume/gain joins when enabled — keep ~2^K small
+        # whatever the commit cadence (driver.py)
         truncate_every=3 if (gamma == 0.0 and min_gain is None) else 2,
     )
     # materialize the (id, label) projection and release the internal

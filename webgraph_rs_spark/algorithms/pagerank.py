@@ -267,7 +267,8 @@ def pagerank(
         checkpoint_every=checkpoint_every,
         resume=resume,
         # state-reference multiplicity: 1 without the L1 delta join, 2 with
-        # it (plan grows ~2^K between truncations — see driver.py)
+        # it (plan grows ~2^K between truncations whatever the commit
+        # cadence — see driver.py)
         truncate_every=8 if threshold is None else 4,
     )
     err = res.metrics_history[-1].get("err", float("nan")) if res.metrics_history else 0.0

@@ -8,9 +8,10 @@ has no checkpointing; its closest precedent is LLP persisting per-gamma label
 files and re-reading them (``algo/src/llp/mod.rs:202-215,449-461``). Here the
 loop is a first-class driver object that:
 
-- persists the vertex-state DataFrame every ``checkpoint_every`` iterations
-  as parquet (truncating Spark lineage — essential for iterative jobs, or the
-  plan grows unboundedly),
+- truncates Spark lineage every ``truncate_every`` iterations (essential
+  for iterative jobs, or the plan grows unboundedly) and, with a store,
+  commits the vertex-state DataFrame as parquet every ``checkpoint_every``
+  iterations — two independent cadences,
 - appends a manifest line per iteration with per-partition row counts +
   metrics + wall time (the "per-partition lineage + metrics" contract),
 - resumes from the latest *complete* checkpoint after a kill: the manifest
@@ -268,15 +269,41 @@ class IterationResult:
     resumed_from: int | None = None
 
 
-# Lineage is truncated every K iterations when no durable store is active.
-# K must respect the step's STATE-REFERENCE MULTIPLICITY r (how many times
-# step(state) embeds the state subplan): the logical tree grows like r^K
-# between truncations (plans are in-memory DAGs but Catalyst rules and plan
-# stringification expand them as trees), so r=1 steps tolerate large K while
-# an r=3 step at K=6 builds a ~3^6-subplan tree — enough to OOM the driver
-# building the AQE plan-change string. Callers with r > 1 pass an explicit
-# truncate_every (current values: pagerank 8 when threshold is None else 4,
-# connected_components 3, labelprop 3 or 2, birank 2, cc_star 2).
+def advance_anchor(
+    anchor: DataFrame, consumed: DataFrame, new: DataFrame, truncated: bool
+) -> DataFrame:
+    """The one release rule of a loop that truncates lineage only at some
+    iterations; returns the anchor to keep.
+
+    ``anchor`` is the last truncation product (the loop's initial state
+    before the first one). Between truncations every cached state's only
+    recompute path roots at it, so releasing it early turns a lost cache
+    block of the live state into an unrecoverable 'checkpoint block not
+    found' failure. ``consumed`` is the state ``new`` was computed from,
+    already materialized past: it is released unless it is the anchor. When
+    ``new`` is a truncation product it becomes the anchor and the old one
+    is released.
+    """
+    if consumed is not anchor:
+        release_state(consumed)
+    if not truncated:
+        return anchor
+    release_state(anchor)
+    return new
+
+
+# Lineage is truncated every K iterations, store or not. K must respect the
+# step's STATE-REFERENCE MULTIPLICITY r (how many times step(state) embeds
+# the state subplan): the logical tree grows like r^K between truncations
+# (plans are in-memory DAGs but Catalyst rules and plan stringification
+# expand them as trees), so r=1 steps tolerate large K while an r=3 step at
+# K=6 builds a ~3^6-subplan tree — enough to OOM the driver building the AQE
+# plan-change string. Callers with r > 1 pass an explicit truncate_every
+# (current values: pagerank 8 when threshold is None else 4,
+# connected_components 3, labelprop 3 or 2, birank 2, cc_star 2). Durable
+# commits (every ``checkpoint_every`` iterations) are a separate cadence:
+# each commit also truncates, but a long commit interval never lets the
+# plan grow past K.
 DEFAULT_TRUNCATE_EVERY = 4
 
 
@@ -295,39 +322,36 @@ def iterate(
     """Run ``state' = step(state)`` until ``stop`` fires.
 
     ``step(state, i)`` returns ``(new_state, metrics)``; metrics feed the
-    predicate (keys like ``l1_delta`` / ``modified``). Between checkpoints the
-    state is kept persisted in memory; every ``checkpoint_every`` iterations
-    it is committed to the store and re-read, truncating lineage. With
-    ``resume=True`` and an existing store, the loop continues from the latest
-    complete iteration — a killed job redoes at most ``checkpoint_every - 1``
-    iterations.
+    predicate (keys like ``l1_delta`` / ``modified``). Lineage is truncated
+    every ``truncate_every`` iterations (default
+    :data:`DEFAULT_TRUNCATE_EVERY`), at every commit and on every exit;
+    between truncations the state is kept persisted in memory. With a
+    durable store, every ``checkpoint_every`` iterations and on exit the
+    truncation commits the state to the store and re-reads it; other
+    truncations are ``localCheckpoint``s. The two cadences are independent.
+    With ``resume=True`` and an existing store, the loop continues from the
+    latest complete iteration — a killed job redoes at most
+    ``checkpoint_every - 1`` iterations.
 
     ``metrics`` may be a CALLABLE instead of a dict: it is invoked after the
     loop's own materializing action, enabling single-action iterations via
     ``DataFrame.observe`` — the step attaches observed aggregates to the
     state plan and the metrics ride along with the materialization instead
-    of costing a second pass. (With ``checkpoint_every > 1`` and a durable
-    store, a stop detected from observed metrics between checkpoints
-    triggers a late commit so the final state is always durable.)
+    of costing a second pass. (A stop seen in observed metrics, after the
+    iteration's action, triggers a late truncation — a commit with a store
+    — unless the iteration already made one, so the final state is always
+    truncated and, with a store, durable.)
 
-    ``truncate_every`` — lineage-truncation interval when there is NO
-    durable store (default :data:`DEFAULT_TRUNCATE_EVERY`, floored by
-    ``checkpoint_every``). Between truncations the state lives in the
-    cache, which PRESERVES its hash partitioning, so the next iteration's
-    vertex-state joins stay exchange-free; a ``localCheckpoint`` boundary
-    (an AQE plan wrapped into a LogicalRDD) loses the partitioning and
-    forces a vertex-sized re-shuffle + one extra job per iteration —
-    measured as the dominant fixed cost of small/medium iterations. With a
-    durable store the commit cadence stays ``checkpoint_every`` (a commit
-    already truncates).
+    Between truncations the cache PRESERVES the state's hash partitioning,
+    so the next iteration's vertex-state joins stay exchange-free; a
+    ``localCheckpoint`` boundary (an AQE plan wrapped into a LogicalRDD)
+    loses the partitioning and forces a vertex-sized re-shuffle + one extra
+    job per iteration — measured as the dominant fixed cost of small/medium
+    iterations, hence ``truncate_every > 1``.
     """
     store = CheckpointStore(checkpoint_dir, job) if checkpoint_dir else None
-    if store is not None:
-        trunc = checkpoint_every
-    else:
-        trunc = truncate_every if truncate_every is not None else max(
-            checkpoint_every, DEFAULT_TRUNCATE_EVERY
-        )
+    if truncate_every is None:
+        truncate_every = DEFAULT_TRUNCATE_EVERY
     it = 0
     resumed_from = None
     metrics_history: list[dict] = []
@@ -348,41 +372,26 @@ def iterate(
                 return IterationResult(state, it, metrics_history, resumed_from)
 
     state = state.persist()
-    prev = None
-    # Truncation products (LogicalRDD / store re-reads) whose BLOCKS back
-    # the lineage of the persist-only states that follow them: between
-    # truncations a cached state's only recompute path roots at the last
-    # truncation product, so releasing that product per-iteration (the old
-    # policy) turned any lost cache block of a live state into an
-    # unrecoverable 'checkpoint block not found' failure. Their release is
-    # DEFERRED until the next truncation makes the live state
-    # self-contained again. Every exit truncates the final state (do_ckpt
-    # on dict-metrics stops and on the max_safety_iter valve, the late
-    # commit on observe-metrics stops), so the deferred list is always
-    # flushed by loop end.
-    held_trunc: list[DataFrame] = []
-    prev_is_trunc = False
-    cur_is_trunc = False
+    anchor = state  # the last truncation product (advance_anchor)
 
     def _truncate(
-        df: DataFrame, it: int, metrics: dict | Callable[[], dict], t0: float
+        df: DataFrame, it: int, metrics: dict | Callable[[], dict], t0: float,
+        commit: bool,
     ) -> DataFrame:
-        if store is not None:
-            committed = store.write(df, it, metrics, (time.monotonic() - t0) * 1000.0)
-            df.unpersist()
-            return committed.persist()
-        # No durable store: still truncate lineage, or the logical plan
-        # (and driver stack at analysis time) grows without bound in
-        # iterative jobs. Materialize into the cache FIRST, then
-        # localCheckpoint — checkpointing from the cache is ~30x cheaper
-        # than letting localCheckpoint re-execute the plan itself
-        # (measured: 0.5s vs 15s on a 2M-row state). ONE action: the eager
-        # localCheckpoint executes through the just-persisted cache
-        # (populating it on the way), truncates lineage, and — verified —
-        # resolves any attached observe metrics; a separate count() first
-        # would be a second job.
-        out = df.localCheckpoint(eager=True)
-        df.unpersist()
+        if commit:
+            wall_ms = (time.monotonic() - t0) * 1000.0
+            out = store.write(df, it, metrics, wall_ms).persist()
+        else:
+            # Materialize into the cache FIRST, then localCheckpoint —
+            # checkpointing from the cache is ~30x cheaper than letting
+            # localCheckpoint re-execute the plan itself (measured: 0.5s vs
+            # 15s on a 2M-row state). ONE action: the eager localCheckpoint
+            # executes through the just-persisted cache (populating it on
+            # the way), truncates lineage, and — verified — resolves any
+            # attached observe metrics; a separate count() first would be a
+            # second job.
+            out = df.localCheckpoint(eager=True)
+        release_state(df)
         return out
 
     while it < max_safety_iter:
@@ -396,42 +405,28 @@ def iterate(
             # the store's manifest line and the stop check share one call
             metrics = functools.cache(metrics)
         new_state = new_state.persist()
-        new_is_trunc = (
-            it % trunc == 0
-            or it >= max_safety_iter
-            or (not observed and stop.should_stop(it, metrics))
+        ending = it >= max_safety_iter or (
+            not observed and stop.should_stop(it, metrics)
         )
-        if new_is_trunc:
-            new_state = _truncate(new_state, it, metrics, t0)
+        commit = store is not None and (ending or it % checkpoint_every == 0)
+        truncated = commit or ending or it % truncate_every == 0
+        if truncated:
+            new_state = _truncate(new_state, it, metrics, t0, commit)
         else:
-            new_state.count()  # materialize before dropping the parent
+            new_state.count()  # materialize before releasing the consumed state
         if observed:
             metrics = metrics()
-            if not new_is_trunc and stop.should_stop(it, metrics):
-                # late commit: the loop ends now, truncate the final state
-                new_state = _truncate(new_state, it, metrics, t0)
-                new_is_trunc = True
-        if prev is not None:
-            if prev_is_trunc:
-                held_trunc.append(prev)  # later states' lineage needs it
-            else:
-                release_state(prev)
-        prev, prev_is_trunc = state, cur_is_trunc
-        state, cur_is_trunc = new_state, new_is_trunc
-        if new_is_trunc:
-            # the live state is self-contained again — flush the deferred
-            # truncation products (prev is consumed and never recomputed)
-            for df in held_trunc:
-                release_state(df)
-            held_trunc.clear()
+            exit_ready = commit if store is not None else truncated
+            if not exit_ready and stop.should_stop(it, metrics):
+                # late truncation: the loop ends now
+                new_state = _truncate(new_state, it, metrics, t0, store is not None)
+                truncated = True
+        anchor = advance_anchor(anchor, state, new_state, truncated)
+        state = new_state
         metrics = dict(
             metrics, iteration=it, wall_sec=round(time.monotonic() - t0, 3)
         )
         metrics_history.append(metrics)
         if stop.should_stop(it, metrics):
             break
-    if prev is not None:
-        release_state(prev)
-    for df in held_trunc:
-        release_state(df)
     return IterationResult(state, it, metrics_history, resumed_from)
