@@ -98,9 +98,8 @@ def test_hyperball_releases_every_state(spark, systolic_threshold):
 
 
 def test_birank_storage_does_not_grow_with_iterations(spark):
-    """BiRank caches one item pass per step; each is released once the
-    state computed with it is materialized, so what is left after a run
-    does not depend on how many iterations it ran."""
+    """BiRank leaves nothing persistent behind once both result frames are
+    released, however many iterations it ran."""
     e = spark.createDataFrame(
         [(u, (u * 7 + k) % 15) for u in range(20) for k in range(3)],
         "u long, p long",
@@ -114,7 +113,7 @@ def test_birank_storage_does_not_grow_with_iterations(spark):
         release_state(res.user_ranks)
         release_state(res.item_ranks)
         left.append(_n_persist_since(spark, floor))
-    assert left[0] == left[1], left
+    assert left == [0, 0], left
 
 
 def test_llp_releases_losing_labelings(spark):

@@ -124,6 +124,26 @@ def test_cc_resume_with_chg_state_schema(spark, tmp_path):
     )
 
 
+@pytest.mark.parametrize("damping", [None, "half"])
+def test_lp_resume_restores_frontier(spark, tmp_path, damping):
+    """LP killed after 2 rounds resumes from the restored frontier (the
+    ``_chg``/``_prop`` columns, sized by the manifest's last metrics) and
+    reaches the uninterrupted labels, with and without damping's gated
+    set."""
+    n, edges = erdos_renyi(60, 0.05, seed=11)
+    g = graph_from_pandas(spark, edges, n)
+    ck = str(tmp_path / "lp_ck")
+    full = label_propagation(g, damping=damping)
+    label_propagation(g, damping=damping, max_iter=2, checkpoint_dir=ck, job="lp")
+    resumed = label_propagation(g, damping=damping, checkpoint_dir=ck, job="lp")
+    assert resumed.resumed_from == 2
+    assert resumed.iterations == full.iterations
+    assert (
+        _labels_array(resumed.labels, n).tolist()
+        == _labels_array(full.labels, n).tolist()
+    )
+
+
 @pytest.mark.parametrize(
     "algo, frontier_cols",
     [
@@ -133,9 +153,11 @@ def test_cc_resume_with_chg_state_schema(spark, tmp_path):
 )
 def test_resume_checkpoint_without_frontier_columns(spark, tmp_path, algo, frontier_cols):
     """A checkpoint written before the state carried its frontier columns
-    resumes as a full rescan and reaches the uninterrupted labels. (LP's
-    first resumed round rescans without reading the columns; CC adds
-    ``_chg = true``.)"""
+    resumes as a full rescan and reaches the uninterrupted labels. (A
+    current checkpoint restores the frontier: both steps size it from the
+    manifest's last metrics. Without the columns, CC adds ``_chg = true``
+    and LP ignores those metrics, so its first resumed round rescans in
+    full.)"""
     import os
 
     import pyarrow.parquet as pq

@@ -17,6 +17,8 @@ import pytest
 
 from tests.oracles import erdos_renyi
 from webgraph_rs_spark.algorithms import (
+    birank,
+    cc_star,
     connected_components,
     label_propagation,
     pagerank,
@@ -48,6 +50,17 @@ def fixture_graph(spark):
     g.unpersist()
 
 
+def _birank(g, d):
+    """BiRank to convergence on a 20-user, 15-item bipartite graph (the
+    input of ``test_cache_hygiene.py``); ``g`` only lends its session."""
+    spark = g.edges.sparkSession
+    e = spark.createDataFrame(
+        [(u, (u * 7 + k) % 15) for u in range(20) for k in range(3)],
+        "u long, p long",
+    )
+    return birank(e, spark.range(20), spark.range(15), threshold=1e-8)
+
+
 @pytest.mark.parametrize(
     "name, run, max_jobs_per_iter",
     [
@@ -59,6 +72,8 @@ def fixture_graph(spark):
         ),
         ("connected_components", lambda g, d: connected_components(g), 7.5),
         ("label_propagation", lambda g, d: label_propagation(g), 8.5),
+        ("cc_star", lambda g, d: cc_star(g), 18.5),
+        ("birank", _birank, 9.0),
     ],
 )
 def test_jobs_per_iteration(spark, fixture_graph, tmp_ckpt, name, run, max_jobs_per_iter):

@@ -185,6 +185,39 @@ def test_commit_without_manifest_line_resumes_from_previous(spark, tmp_ckpt):
     assert resumed.iterations == full.iterations
 
 
+@pytest.mark.parametrize("legacy_manifest", [False, True])
+def test_resume_restores_dangling_mass(spark, tmp_ckpt, legacy_manifest):
+    """On a graph with dangling nodes, PageRank resumed after 3 commits
+    takes the restored state's dangling mass from the manifest's
+    ``next_dangling_mass``; a manifest written before that metric existed
+    has it recomputed from the restored state. Both equal the
+    uninterrupted ranks."""
+    n, edges = erdos_renyi(50, 0.1, seed=7)
+    g = graph_from_pandas(spark, edges, n + 5)  # 5 isolated, dangling nodes
+    full = pagerank(g, threshold=1e-9)
+    pagerank(g, threshold=1e-9, max_iter=3, checkpoint_dir=tmp_ckpt, job="pr")
+    store = CheckpointStore(tmp_ckpt, "pr")
+    lines = store.manifest()
+    assert [m["iteration"] for m in lines] == [1, 2, 3]
+    assert all(m["metrics"]["next_dangling_mass"] > 0 for m in lines)
+    if legacy_manifest:
+        for m in lines:
+            del m["metrics"]["next_dangling_mass"]
+        with open(store.manifest_path, "w", encoding="utf-8") as f:
+            f.writelines(json.dumps(m) + "\n" for m in lines)
+
+    resumed = pagerank(g, threshold=1e-9, checkpoint_dir=tmp_ckpt, job="pr", resume=True)
+    assert resumed.resumed_from == 3
+    a = np.zeros(n + 5)
+    b = np.zeros(n + 5)
+    for r in full.ranks.collect():
+        a[r["id"]] = r["rank"]
+    for r in resumed.ranks.collect():
+        b[r["id"]] = r["rank"]
+    assert np.allclose(a, b, rtol=0.0, atol=1e-12)
+    assert resumed.iterations == full.iterations
+
+
 def test_torn_manifest_line_ignored(spark, tmp_ckpt):
     store = CheckpointStore(tmp_ckpt, "torn")
     df = spark.range(10).selectExpr("id", "cast(id as double) as rank")
@@ -199,7 +232,7 @@ def test_iterate_generic_counter(spark, tmp_ckpt):
 
     state0 = spark.range(4).selectExpr("id", "cast(0 as long) as v")
 
-    def step(state, it):
+    def step(state, it, last):
         new = state.withColumn("v", F.col("v") + 1)
         return new, {"modified": 1 if it < 4 else 0}
 
@@ -218,7 +251,7 @@ def test_safety_valve_exit_truncates_final_state(spark):
 
     state0 = spark.range(4).selectExpr("id", "cast(0 as long) as v")
 
-    def step(state, it):
+    def step(state, it, last):
         return state.withColumn("v", F.col("v") + 1), {"modified": 1}
 
     res = iterate(spark, state0, step, MaxIter(100), max_safety_iter=5)
@@ -238,7 +271,7 @@ def test_commit_interval_does_not_set_lineage_depth(spark, tmp_ckpt):
     state0 = spark.range(16).selectExpr("id", "cast(id as double) as v")
     leaves: list[int] = []
 
-    def step(state, it):
+    def step(state, it, last):
         leaves.append(state._jdf.queryExecution().logical().collectLeaves().size())
         a, b = state.alias("a"), state.alias("b")
         new = a.join(b, "id").select("id", (F.col("a.v") + F.col("b.v")).alias("v"))

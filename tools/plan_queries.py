@@ -3,10 +3,8 @@
 Usage: PYTHONPATH=. python tools/plan_queries.py <outdir> <suffix> name [name...]
 
 Writes ``<outdir>/<name>_<suffix>.txt`` for every requested registry query
-(built at sf0.01). Iterative operators' *per-iteration* plans are captured
-separately through the ``SPARK_GRAFT_EXPLAIN_DIR`` hook in the driver loop —
-the registry-level plan of an iterative query only shows the final
-checkpointed state scan.
+(built at sf0.01). The registry-level plan of an iterative query only shows
+the final checkpointed state scan.
 """
 
 from __future__ import annotations

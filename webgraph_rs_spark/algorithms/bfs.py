@@ -18,7 +18,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from webgraph_rs_spark.driver import maybe_explain, release_state
+from webgraph_rs_spark.driver import release_state
 from webgraph_rs_spark.graph import LinkGraph, ranked
 
 # frontiers below this row count are broadcast to skip the shuffle join
@@ -113,7 +113,6 @@ def bfs_distances(
             cand = cand.localCheckpoint()
             n_cand = cand.count()
         nxt = cand.join(visited_ids, "id", "left_anti")
-        maybe_explain(nxt, f"bfs_level{depth + 1:03d}")
         # the frontier size rides the eager-checkpoint action as an
         # observe metric — one job per level, not checkpoint + count
         from pyspark.sql import Observation

@@ -20,10 +20,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from webgraph_rs_spark.driver import MaxIter, MetricBelow, iterate
+from webgraph_rs_spark.driver import MaxIter, MetricBelow, iterate, release_state
 
 
 @dataclass
@@ -116,33 +116,25 @@ def birank(
     e_up = e.select(F.col("u").alias("_f"), F.col("p").alias("_t"))
     e_pu = e.select(F.col("p").alias("_f"), F.col("u").alias("_t"))
 
-    # the last step's cached item pass: it backs only the state computed
-    # with it, which the driver has materialized by the next step
-    p_cache: list[DataFrame] = []
-
-    def step(state: DataFrame, it: int):
-        while p_cache:
-            p_cache.pop().unpersist()
+    def step(state: DataFrame, it: int, last: dict):
         su = state.filter(F.col("side") == "u").select("id", "rank")
         # item update uses the *current* user ranks, then the user update
         # uses the NEW item ranks — the reference's alternating sweep order.
-        new_p = _gather(su, mu, mp, e_up, beta, "p").persist()
-        p_cache.append(new_p)
-        sp_new = new_p.select("id", "rank")
-        new_u = _gather(sp_new, mp, mu, e_pu, alpha, "u")
-        new = new_u.unionByName(new_p.select("side", "id", "rank")).persist()
+        # The item pass is not cached: the plan embeds it twice, which still
+        # runs fewer Spark jobs than a cached pass of its own
+        # (tests/test_job_counts.py).
+        new_p = _gather(su, mu, mp, e_up, beta, "p")
+        new_u = _gather(new_p.select("id", "rank"), mp, mu, e_pu, alpha, "u")
+        new = new_u.unionByName(new_p)
         if threshold is None:
             return new, {}
-        l1 = (
-            new.join(
-                state.select("side", "id", F.col("rank").alias("old")),
-                ["side", "id"],
-            )
-            .agg(F.sum(F.abs(F.col("rank") - F.col("old"))))
-            .collect()[0][0]
-            or 0.0
-        )
-        return new, {"l1_delta": l1}
+        # the L1 delta rides the driver's materializing action, as in PageRank
+        obs = Observation()
+        observed = new.join(
+            state.select("side", "id", F.col("rank").alias("old")), ["side", "id"]
+        ).observe(obs, F.sum(F.abs(F.col("rank") - F.col("old"))).alias("l1"))
+        out = observed.select("side", "id", "rank")
+        return out, lambda: {"l1_delta": float(obs.get.get("l1") or 0.0)}
 
     stop = (
         MaxIter(max_iter)
@@ -157,8 +149,11 @@ def birank(
         # keep K small (driver.py)
         truncate_every=2,
     )
-    ur = res.state.filter(F.col("side") == "u").select("id", "rank")
-    pr = res.state.filter(F.col("side") == "p").select("id", "rank")
-    for df in (mu, mp, e, *p_cache):
+    # materialize both projections and release the state: a bare
+    # projection could not release the state's checkpoint blocks
+    ur = res.state.filter(F.col("side") == "u").select("id", "rank").localCheckpoint()
+    pr = res.state.filter(F.col("side") == "p").select("id", "rank").localCheckpoint()
+    release_state(res.state)
+    for df in (mu, mp, e):
         df.unpersist()
     return BiRankResult(ur, pr, res.iterations, res.metrics_history)

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
@@ -68,22 +68,23 @@ def connected_components(
     of that action as a Spark job of its own, so a round measures about
     7.5 jobs (pinned in ``tests/test_job_counts.py``).
     """
-    from pyspark.sql import Observation
-
     spark = g.edges.sparkSession
     sym = g.sym_edges()
     state0 = g.vertices.select(
         "id", F.col("id").alias("label"), F.lit(True).alias("_chg")
     )
-    fr_n: dict = {"n": None}  # last round's frontier size (observe metric)
 
-    def step(state: DataFrame, it: int):
+    def step(state: DataFrame, it: int, last: dict):
         if "_chg" not in state.columns:
             # a checkpoint written before the frontier column: mark every
-            # node changed — a full rescan, exact by monotonicity
+            # node changed — a full rescan, exact by monotonicity — and
+            # size it as unknown
             state = state.withColumn("_chg", F.lit(True))
+            last = {}
+        # last round's frontier size, restored with the state on resume
+        n_fr = last.get("modified")
         src_labels = state.filter(F.col("_chg")).select("id", "label")
-        if fr_n["n"] is not None and fr_n["n"] <= 1_000_000:
+        if n_fr is not None and n_fr <= 1_000_000:
             src_labels = F.broadcast(src_labels)
         else:
             src_labels = src_labels.hint("shuffle_hash")
@@ -111,7 +112,6 @@ def connected_components(
 
         def metrics_fn() -> dict:
             m = int(obs.get.get("m") or 0)
-            fr_n["n"] = m
             return {"modified": m, "frontier_rows": m}
 
         return observed, metrics_fn
@@ -195,27 +195,27 @@ def cc_star(
             .dropDuplicates(["src", "dst"])
         )
 
-    parent_cache: list[DataFrame] = []
     # convergence = stable canonical edge set, detected by an
     # order-insensitive (count, bit_xor of xxhash64) signature of the
-    # (deduped) edge rows — one scan of the already-persisted new state vs
-    # two exceptAll edge-sized shuffles per round. A signature collision
-    # (2^-64, deterministic inputs) would stop one round early; acceptable.
-    prev_sig: dict = {"v": None}
-
-    def step(state: DataFrame, it: int) -> tuple[DataFrame, dict]:
-        while parent_cache:
-            parent_cache.pop().unpersist()
-        after = _small_star(_large_star(state)).persist()
-        parent_cache.append(after)
-        row = after.agg(
+    # (deduped) edge rows, observed on the driver's materializing action
+    # and compared with last round's — vs two exceptAll edge-sized shuffles
+    # per round. A signature collision (2^-64, deterministic inputs) would
+    # stop one round early; acceptable.
+    def step(state: DataFrame, it: int, last: dict):
+        obs = Observation()
+        after = _small_star(_large_star(state)).observe(
+            obs,
             F.count(F.lit(1)).alias("m"),
             F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
-        ).collect()[0]
-        sig = (int(row["m"]), int(row["h"] or 0))
-        changed = 0 if sig == prev_sig["v"] else 1
-        prev_sig["v"] = sig
-        return after, {"modified": changed}
+        )
+
+        def metrics_fn() -> dict:
+            vals = obs.get
+            sig = {"sig_rows": int(vals["m"]), "sig_hash": int(vals.get("h") or 0)}
+            same = all(last.get(k) == v for k, v in sig.items())
+            return dict(sig, modified=0 if same else 1)
+
+        return after, metrics_fn
 
     stop = MetricZero("modified") | MaxIter(max_iter)
     res = iterate(

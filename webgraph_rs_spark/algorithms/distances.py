@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 from webgraph_rs_spark.driver import (
     CheckpointStore,
     advance_anchor,
-    maybe_explain,
     release_state,
 )
 from webgraph_rs_spark.graph import LinkGraph
@@ -401,7 +400,6 @@ def hyperball(
         recomputed = gathered.groupBy("id").agg(
             F.hll_union_agg("sketch").alias("sketch")
         )
-        maybe_explain(recomputed, f"{job}_union_iter{t:03d}")
         # Keep the sketch state CACHED between truncations instead of
         # localCheckpointing every iteration: the cache preserves the
         # groupBy's hash(id) partitioning, so next iteration's gather join

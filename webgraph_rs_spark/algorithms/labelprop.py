@@ -113,16 +113,17 @@ def label_propagation(
     # ``_prop`` COLUMNS of the driver-managed state — views filtered per
     # round instead of separately checkpointed tables — and the round's
     # counts ride the driver's materializing action as observe metrics.
-    # counts from last round's observe: n_chg (adopted), n_prop (proposals)
-    frontier: dict = {"n_chg": None, "n": None}
 
-    def step(state: DataFrame, it: int):
-        n_fr = frontier["n"]
-        has_gated = (
-            damping == "half"
-            and frontier["n_chg"] is not None
-            and frontier["n"] > frontier["n_chg"]
-        )
+    def step(state: DataFrame, it: int, last: dict):
+        if "_chg" not in state.columns:
+            # a checkpoint written before the frontier columns: size the
+            # frontier as unknown, which rescans in full
+            last = {}
+        # last round's counts, restored with the state on resume: modified
+        # (proposals under damping) and frontier_rows (adopted changes)
+        n_fr = last.get("modified")
+        n_chg = last.get("frontier_rows")
+        has_gated = damping == "half" and n_chg is not None and n_fr > n_chg
         # the two semi-joins only pay off once the frontier has shrunk —
         # with most nodes still changing (or on the first round), a full
         # rescan is cheaper
@@ -215,15 +216,13 @@ def label_propagation(
             n_changed = int(vals.get("c") or 0)
             # under damping, "modified" counts PROPOSALS (wanted-to-
             # change): stopping on adoptions alone would mistake a
-            # fully-gated round for the fixpoint
+            # fully-gated round for the fixpoint. The next round sizes its
+            # broadcasts/rescans on it too: the affected set unions the
+            # gated nodes in, so sizing on adopted-only could oversize a
+            # broadcast when most proposals were damped away
             modified = (
                 n_changed if damping is None else int(vals.get("p") or 0)
             )
-            frontier["n_chg"] = n_changed
-            # gate broadcasts/rescans on PROPOSALS: the affected set
-            # unions the gated nodes in, so sizing on adopted-only could
-            # oversize a broadcast when most proposals were damped away
-            frontier["n"] = modified
             metrics = {"modified": modified, "frontier_rows": n_changed}
             if min_gain is not None:
                 metrics["gain"] = gain_fn()

@@ -130,27 +130,11 @@ def pagerank(
         ),
     ).collect()[0]
     has_dangling = bool(setup["any_dangling"])
-    d0_fresh = float(setup["d0"] or 0.0)
-
-    # A resumed run starts from a RESTORED state, where d0_fresh does not
-    # apply — fall back to the lazy per-state computation in that case.
-    will_resume = False
-    if checkpoint_dir and resume:
-        from webgraph_rs_spark.driver import CheckpointStore
-
-        will_resume = (
-            CheckpointStore(checkpoint_dir, job).latest_complete() is not None
-        )
-
-    # Dangling mass is carried forward between iterations; together with the
-    # L1 delta it rides along the driver's own materializing action as
-    # ``observe`` metrics — ZERO extra actions/passes per iteration. On the
-    # first call it is d0 (fresh run) or computed from the restored state.
-    dangling_carry: dict[str, float | None] = {
-        "d": (None if will_resume else d0_fresh) if has_dangling else 0.0
-    }
+    d0 = float(setup["d0"] or 0.0)
 
     def _dangling_of(state: DataFrame) -> float:
+        # only for a resume from a manifest written before the
+        # next_dangling_mass metric existed
         return (
             state.join(meta.select("id", "is_dangling"), "id")
             .agg(F.sum(F.when(F.col("is_dangling"), F.col("rank")).otherwise(0.0)))
@@ -158,9 +142,17 @@ def pagerank(
             or 0.0
         )
 
-    def step(state: DataFrame, it: int):
-        d = dangling_carry["d"]
-        if d is None:
+    def step(state: DataFrame, it: int, last: dict):
+        # The dangling mass of ``state`` is the previous iteration's
+        # observed next_dangling_mass (a resume restores it from the
+        # manifest); a fresh start's state is the preference vector, so d0.
+        if not has_dangling:
+            d = 0.0
+        elif not last:
+            d = d0
+        elif "next_dangling_mass" in last:
+            d = last["next_dangling_mass"]
+        else:
             d = _dangling_of(state)
         # scale the state by 1/outdeg (vertex-sized join against cached meta)
         scaled = (
@@ -242,9 +234,9 @@ def pagerank(
 
         def metrics_fn() -> dict:
             vals = obs.get  # blocks until the materializing action finishes
-            if has_dangling:
-                dangling_carry["d"] = float(vals.get("next_d") or 0.0)
             metrics = {"dangling_mass": d, "arcs": m}
+            if has_dangling:
+                metrics["next_dangling_mass"] = float(vals.get("next_d") or 0.0)
             if threshold is not None:
                 l1 = float(vals.get("l1") or 0.0)
                 metrics.update(l1_delta=l1, err=coef * l1)

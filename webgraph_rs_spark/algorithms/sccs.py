@@ -42,7 +42,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from webgraph_rs_spark.driver import CheckpointStore, maybe_explain, release_state
+from webgraph_rs_spark.driver import CheckpointStore, release_state
 from webgraph_rs_spark.graph import LinkGraph
 
 
@@ -357,7 +357,6 @@ def strongly_connected_components(
                 )
                 cur = step_out.select("id", "color")
                 fr = step_out.filter(F.col("_chg")).select("id", "color")
-            maybe_explain(step_out, f"scc_color_iter{color_iters:03d}")
             # changed count rides the checkpoint action as an observe
             # metric — one job per materialization instead of two
             obs = Observation()

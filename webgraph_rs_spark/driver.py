@@ -18,6 +18,14 @@ loop is a first-class driver object that:
   line is written once, only after the parquet commit and its metrics, so a
   torn write is invisible and re-done.
 
+The loop owns every action, cache and release; a step only builds plans.
+``step(state, it, last)`` returns the next state's plan and its metrics
+(observed ones as a callable), and it never persists, unpersists, collects
+or counts. ``last`` is the previous iteration's metrics: ``{}`` on a fresh
+start, the manifest's last complete line on resume. A value one iteration
+hands to the next (a frontier size, a carried scalar) is a metric, so it
+survives a resume with the state.
+
 At cluster scale the checkpoint store would be an Iceberg table (snapshot =
 iteration); parquet-dir-per-iteration is the same design with the manifest
 playing the role of Iceberg's metadata log. (Iceberg jars are not in this
@@ -213,28 +221,6 @@ def _jsonable(v):
         return str(v)
 
 
-def maybe_explain(df: DataFrame, tag: str) -> None:
-    """Debug hook: when $SPARK_GRAFT_EXPLAIN_DIR is set, write the formatted
-    physical plan of ``df`` to ``<dir>/<tag>.txt``. Lets plan audits capture
-    the REAL per-iteration plans of the iterative jobs (instead of replicas
-    that can drift from the code). No-op unless the env var is set."""
-    out_dir = os.environ.get("SPARK_GRAFT_EXPLAIN_DIR")
-    if not out_dir:
-        return
-    try:
-        import contextlib
-        import io
-
-        os.makedirs(out_dir, exist_ok=True)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain(mode="formatted")
-        with open(os.path.join(out_dir, f"{tag}.txt"), "w", encoding="utf-8") as f:
-            f.write(buf.getvalue())
-    except Exception:  # noqa: BLE001 - debug-only, never fail the job
-        pass
-
-
 def release_state(df: DataFrame | None) -> None:
     """Fully release a DISCARDED state DataFrame: cache entry AND, when the
     plan is a localCheckpoint product (LogicalRDD), the checkpoint RDD
@@ -310,7 +296,7 @@ DEFAULT_TRUNCATE_EVERY = 4
 def iterate(
     spark: SparkSession,
     state0: DataFrame,
-    step: Callable[[DataFrame, int], tuple[DataFrame, dict]],
+    step: Callable[[DataFrame, int, dict], tuple[DataFrame, dict]],
     stop: StopPredicate,
     checkpoint_dir: str | None = None,
     job: str = "job",
@@ -321,9 +307,15 @@ def iterate(
 ) -> IterationResult:
     """Run ``state' = step(state)`` until ``stop`` fires.
 
-    ``step(state, i)`` returns ``(new_state, metrics)``; metrics feed the
-    predicate (keys like ``l1_delta`` / ``modified``). Lineage is truncated
-    every ``truncate_every`` iterations (default
+    ``step(state, i, last)`` returns ``(new_state, metrics)``: the plan of
+    the next state, and the metrics that feed the predicate (keys like
+    ``l1_delta`` / ``modified``). ``last`` is iteration ``i``'s metrics
+    dict (``{}`` when ``i`` is the fresh start, the manifest's line when it
+    is the resume point), so whatever a step carries from one iteration to
+    the next is a metric and survives a resume. The step only builds plans:
+    this loop runs every action and owns every cache and release.
+
+    Lineage is truncated every ``truncate_every`` iterations (default
     :data:`DEFAULT_TRUNCATE_EVERY`), at every commit and on every exit;
     between truncations the state is kept persisted in memory. With a
     durable store, every ``checkpoint_every`` iterations and on exit the
@@ -396,9 +388,9 @@ def iterate(
 
     while it < max_safety_iter:
         t0 = time.monotonic()
-        new_state, metrics = step(state, it)
+        last = metrics_history[-1] if metrics_history else {}
+        new_state, metrics = step(state, it, last)
         it += 1
-        maybe_explain(new_state, f"{job}_iter{it:03d}")
         observed = callable(metrics)
         if observed:
             # resolved by the loop's own materializing action; memoized so
