@@ -473,14 +473,13 @@ def _q_contract(spark, sf):
 def _q_check_symm(spark, sf):
     _import_engine()
     from webgraph_rs_spark.testgraphs import lineitem_graph
+    from webgraph_rs_spark.session import local_table
     from webgraph_rs_spark.transforms import asymmetric_arcs, symmetrize
 
     g = lineitem_graph(spark, sf)
     raw = asymmetric_arcs(g).count()
     sym = asymmetric_arcs(symmetrize(g)).count()
-    return spark.createDataFrame(
-        [(int(raw), int(sym))], "asym_raw long, asym_sym long"
-    )
+    return local_table(spark, [(int(raw), int(sym))], "asym_raw long, asym_sym long")
 
 
 def _q_successors0(spark, sf):
@@ -583,9 +582,10 @@ def _q_triangles(spark, sf):
     _import_engine()
     from webgraph_rs_spark.testgraphs import lineitem_graph
     from webgraph_rs_spark.algorithms import triangle_count
+    from webgraph_rs_spark.session import local_table
 
     t = triangle_count(lineitem_graph(spark, sf))
-    return spark.createDataFrame([(int(t),)], "triangles long")
+    return local_table(spark, [(int(t),)], "triangles long")
 
 
 def _q_triangles_per_vertex(spark, sf):
@@ -684,10 +684,12 @@ def _q_sumsweep_rd(spark, sf):
     _import_engine()
     from webgraph_rs_spark.testgraphs import functional_graph_small
     from webgraph_rs_spark.algorithms.distances import exact_sum_sweep
+    from webgraph_rs_spark.session import local_table
 
     g = functional_graph_small(spark, sf)
     res = exact_sum_sweep(g, mode="radius_diameter")
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [(int(res.radius), int(res.diameter), bool(res.converged))],
         "radius long, diameter long, converged boolean",
     )
@@ -1930,11 +1932,12 @@ def _q_ecc(spark, sf):
 def _q_radius_diameter(spark, sf):
     _import_engine()
     from webgraph_rs_spark.algorithms.distances import radius_diameter
+    from webgraph_rs_spark.session import local_table
 
     g, res = _apd_base(spark, sf)
     roots = spark.range(APD_SOURCES).select("id")
     r, d = radius_diameter(res.distances, roots)
-    return spark.createDataFrame([(r, d)], "radius long, diameter long")
+    return local_table(spark, [(r, d)], "radius long, diameter long")
 
 
 def _q_hyperball(spark, sf):

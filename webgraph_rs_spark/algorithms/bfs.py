@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from webgraph_rs_spark.driver import release_state
 from webgraph_rs_spark.graph import LinkGraph, ranked
+from webgraph_rs_spark.session import local_table
 
 # frontiers below this row count are broadcast to skip the shuffle join
 BROADCAST_FRONTIER_MAX = 1_000_000
@@ -72,7 +73,7 @@ def bfs_distances(
     if isinstance(roots, DataFrame):
         frontier = roots.select(F.col("id").cast("long"))
     else:
-        frontier = spark.createDataFrame([(int(r),) for r in roots], "id long")
+        frontier = local_table(spark, [(int(r),) for r in roots], "id long")
     if node_filter is not None:
         frontier = frontier.filter(node_filter)
     edges = g.src_edges()
@@ -141,8 +142,8 @@ def bfs_distances(
         release_state(h)
     ev_df = None
     if events:
-        ev_df = spark.createDataFrame(
-            ev_rows, "level long, frontier_size long, revisits long"
+        ev_df = local_table(
+            spark, ev_rows, "level long, frontier_size long, revisits long"
         )
     return BFSResult(visited, depth, ev_df)
 

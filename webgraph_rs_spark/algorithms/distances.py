@@ -37,6 +37,7 @@ from webgraph_rs_spark.driver import (
     release_state,
 )
 from webgraph_rs_spark.graph import LinkGraph
+from webgraph_rs_spark.session import local_table
 
 # ----------------------------------------------------------- exact distances
 
@@ -686,11 +687,9 @@ class _SccDagBounds:
                     backward=True,
                 )
                 sol = [(c, v, bu_sol[c]) for c, v in fu_sol.items()]
-                comp_fu = self.spark.createDataFrame(
-                    sol, "comp long, cfu long, cbu long"
-                )
+                comp_fu = local_table(self.spark, sol, "comp long, cfu long, cbu long")
             else:
-                comp_fu = self.spark.createDataFrame(sol, "comp long, cfu long")
+                comp_fu = local_table(self.spark, sol, "comp long, cfu long")
         else:
             # Executor-side bounded fixpoint of the same recurrence.
             cur = self.sizes_df.join(per_comp, "comp", "left").select(
@@ -1050,7 +1049,7 @@ def exact_sum_sweep(
                 converged = True
                 break
         pivots += len(sel)
-        roots = spark.createDataFrame([(w,) for w in sel], "id long")
+        roots = local_table(spark, [(w,) for w in sel], "id long")
 
         # two multi-source sweeps for the whole batch
         d_fwd = all_pairs_distances(g_fwd, sources=roots).distances

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from webgraph_rs_spark.driver import CheckpointStore, release_state
 from webgraph_rs_spark.graph import LinkGraph
+from webgraph_rs_spark.session import local_table
 
 
 COLOR_UNROLL = 4  # lazy propagation steps fused per checkpoint/job
@@ -176,7 +177,7 @@ def strongly_connected_components(
             for p in parts[1:]:
                 lab = lab.unionByName(p)
         else:
-            lab = spark_l.createDataFrame([], "id long, label long")
+            lab = local_table(spark_l, [], "id long, label long")
         snap = lab.select("id", "label", F.lit(False).alias("alive"))
         if n_alive > 0:
             snap = snap.unionByName(
@@ -540,7 +541,7 @@ def strongly_connected_components(
         for h in hold:
             release_state(h)
     else:
-        done = spark.createDataFrame([], "id long, label long")
+        done = local_table(spark, [], "id long, label long")
     # `done` IS the checkpointed frame — return it directly so the
     # caller's release_state reaches the checkpoint RDD
     return SCCResult(done, rounds, metrics, resumed_from)

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from webgraph_rs_spark.driver import release_state
 from webgraph_rs_spark.graph import LinkGraph
+from webgraph_rs_spark.session import local_table
 
 
 @dataclass
@@ -32,7 +33,7 @@ def topological_levels(g: LinkGraph, max_rounds: int = 10_000) -> TopSortResult:
     # localCheckpoint per round — same lineage-truncation rationale as bfs.py
     edges = g.edges.filter(F.col("src") != F.col("dst")).localCheckpoint()
     remaining_v = g.vertices.localCheckpoint()
-    levels = spark.createDataFrame([], "id long, level long")
+    levels = local_table(spark, [], "id long, level long")
     rounds = 0
     n_remaining = remaining_v.count()
     while n_remaining > 0 and rounds < max_rounds:

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .graph import LinkGraph
+from .session import local_table
 
 
 # ------------------------------------------------------------ bit reader
@@ -749,7 +750,7 @@ def read_bvgraph(
     if n == 0:
         # degenerate basename: no ranges to decode (repartition(0) would
         # throw), return the empty graph directly
-        edges = spark.createDataFrame([], "src long, dst long")
+        edges = local_table(spark, [], "src long, dst long")
         return LinkGraph(edges, spark.range(0).select("id"), _num_nodes=0, _num_arcs=0)
 
     parts = num_partitions or spark.sparkContext.defaultParallelism
@@ -804,12 +805,12 @@ def _read_bvgraph_sharded(
 
     n = props.nodes
     if n == 0:
-        edges = spark.createDataFrame([], "src long, dst long")
+        edges = local_table(spark, [], "src long, dst long")
         return LinkGraph(
             edges, spark.range(0).select("id"), _num_nodes=0, _num_arcs=0
         )
-    shard_rows = spark.createDataFrame(
-        [(i,) for i in range(nshards)], "shard long"
+    shard_rows = local_table(
+        spark, [(i,) for i in range(nshards)], "shard long"
     ).repartition(min(nshards, num_partitions or nshards))
 
     def decode_shards(pdf_iter):
@@ -2057,9 +2058,5 @@ def read_golden_labels(path: str) -> np.ndarray:
 
 
 def golden_labels_df(spark: SparkSession, path: str, col: str = "golden") -> DataFrame:
-    import pandas as pd
-
     arr = read_golden_labels(path)
-    return spark.createDataFrame(
-        pd.DataFrame({"id": np.arange(len(arr), dtype=np.int64), col: arr})
-    )
+    return local_table(spark, enumerate(arr.tolist()), f"id long, `{col}` long")

@@ -4,7 +4,11 @@ The reference ingests numeric arc lists (``cli/src/from/arcs.rs:22-61``); the
 page -> edge-table layer is this engine's own frontend (SURVEY.md preamble
 gap #2). Contract (north rule / input hint):
 
-- pandas/Arrow UDFs only — no per-row Python UDFs;
+- pandas/Arrow UDFs only — no per-row Python UDFs, and no DataFrame built
+  from a Python list (``spark.createDataFrame(<list>)`` plans a PythonRDD,
+  which runs per-row Python in a worker pool of its own): the Arrow UDFs
+  are the only Python that runs, in one pool. Small driver-side tables go
+  through ``session.local_table``;
 - per-row invariant: ``extract_text(html) == text`` byte-identical per url;
 - links: every ``<a href="...">`` target, in document order.
 

@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from webgraph_rs_spark.session import local_table
+
 EDGE_SCHEMA = "src long, dst long"
 VERTEX_SCHEMA = "id long"
 
@@ -253,13 +255,13 @@ def ranked(
     1. range-partition + sort by the key columns;
     2. row_number within each partition (window is per-partition);
     3. add per-partition cumulative offsets (a tiny driver-side cumsum over
-       the partition-count table, broadcast back).
+       the partition-count table, inlined into the plan as a literal array
+       indexed by partition id).
 
     Deterministic whenever rows are unique on ``order_cols`` (ties would be
     resolved by physical placement — callers must pass a tie-breaking
     column). Null keys must be pre-replaced with sentinels by the caller.
     """
-    spark = df.sparkSession
     if num_partitions:
         vals = df.repartitionByRange(num_partitions, *order_cols)
     else:
@@ -267,24 +269,20 @@ def ranked(
     vals = vals.sortWithinPartitions(*order_cols).withColumn(
         "_pid", F.spark_partition_id()
     )
-    part_counts = (
-        vals.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    )
-    offsets = {}
-    acc = 0
-    for r in sorted(part_counts, key=lambda r: r["_pid"]):
-        offsets[r["_pid"]] = acc
-        acc += r["cnt"]
-    off_df = spark.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()] or [(0, 0)],
-        "_pid int, _off long",
-    )
+    counts = dict(vals.groupBy("_pid").agg(F.count(F.lit(1))).collect())
+    # starts[p] = rows in partitions before p; an empty partition keeps its slot
+    starts, acc = [], 0
+    for p in range(max(counts, default=-1) + 1):
+        starts.append(acc)
+        acc += counts.get(p, 0)
+    offsets = F.array(*[F.lit(o) for o in starts]).cast("array<long>")
     w = W.partitionBy("_pid").orderBy(*order_cols)
     return (
         vals.withColumn("_rn", F.row_number().over(w).cast("long"))
-        .join(F.broadcast(off_df), "_pid")
-        .withColumn(rank_col, F.col("_off") + F.col("_rn") - 1)
-        .drop("_pid", "_rn", "_off")
+        .withColumn(
+            rank_col, F.element_at(offsets, F.col("_pid") + 1) + F.col("_rn") - 1
+        )
+        .drop("_pid", "_rn")
     )
 
 
@@ -331,7 +329,5 @@ def graph_from_pandas(spark: SparkSession, edge_pairs, num_nodes: int) -> LinkGr
     Mirrors the reference's ``VecGraph::from_arcs`` test builders
     (``webgraph/src/graphs/vec_graph.rs:391``).
     """
-    df = spark.createDataFrame(
-        [(int(s), int(d)) for s, d in edge_pairs], schema=EDGE_SCHEMA
-    )
+    df = local_table(spark, [(int(s), int(d)) for s, d in edge_pairs], EDGE_SCHEMA)
     return from_edges(spark, df, num_nodes=num_nodes)

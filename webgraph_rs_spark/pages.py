@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from webgraph_rs_spark.session import local_table
+
 PAGE_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 _EPOCH = "2024-01-01 00:00:00"
@@ -123,7 +125,7 @@ def synthesize_pages(
 def synthesize_pages_from_pairs(
     spark: SparkSession, edge_pairs, num_nodes: int
 ) -> DataFrame:
-    df = spark.createDataFrame(
-        [(int(s), int(d)) for s, d in edge_pairs], "src long, dst long"
+    df = local_table(
+        spark, [(int(s), int(d)) for s, d in edge_pairs], "src long, dst long"
     )
     return synthesize_pages(spark, df, num_nodes)

@@ -4,13 +4,24 @@ Local-mode testing (`local[N]`) stands in for a multi-executor cluster; the
 configs below are the ones that carry over to a 1000-executor deployment:
 AQE (runtime re-plan + skew-join splitting for hub domains), shuffle
 partition sizing, Arrow for the pandas-UDF extraction boundary.
+
+Python runs in exactly one place: the pandas/Arrow UDFs (extraction, page
+synthesis and BVGraph decode among them). The engine never builds a DataFrame from a
+Python list. ``spark.createDataFrame(<list>)`` parallelizes the list as a
+PythonRDD, which runs per-row Python and, started with a different worker
+environment than the Arrow UDFs, gets a ``pyspark.daemon`` worker pool of
+its own (about 310 MB of resident memory on the benchmark's crawl job).
+Small driver-side tables go through :func:`local_table` instead.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -65,3 +76,20 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_table(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A small driver-side table as a JVM local relation.
+
+    ``rows`` are tuples in the order of ``schema``, a DDL string; no rows
+    give an empty table of that schema. The rows reach the JVM as one Arrow
+    table, so the plan is a ``LocalTableScan`` and no Python process starts.
+    """
+    struct = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from webgraph_rs_spark.session import local_table
+
 N_PLANES = 8
 
 
@@ -350,7 +352,8 @@ def ivf_kmeans_centroids(
             )
             .collect()
         )
-        cts = spark.createDataFrame(
+        cts = local_table(
+            spark,
             [(int(r["cell"]), [float(x) for x in r["centroid"]]) for r in rows],
             "cell long, centroid array<double>",
         )
