@@ -2058,5 +2058,9 @@ def read_golden_labels(path: str) -> np.ndarray:
 
 
 def golden_labels_df(spark: SparkSession, path: str, col: str = "golden") -> DataFrame:
+    import pandas as pd
+
     arr = read_golden_labels(path)
-    return local_table(spark, enumerate(arr.tolist()), f"id long, `{col}` long")
+    return spark.createDataFrame(
+        pd.DataFrame({"id": np.arange(len(arr), dtype=np.int64), col: arr})
+    )
